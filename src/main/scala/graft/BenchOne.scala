@@ -17,6 +17,9 @@ object BenchOne {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[benchone] $n ${(System.nanoTime()-t0)/1e9}%.2f s")
+      // cumulative driver fast-path engagement and fallbacks this JVM
+      println(s"[benchone] driver-resolve " + operators.DriverResolve.snapshot()
+        .toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" "))
       System.gc()
     }
     spark.stop()

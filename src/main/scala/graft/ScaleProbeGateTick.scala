@@ -23,7 +23,7 @@ object ScaleProbeGateTick {
     spark.conf.set(key,
       spark.conf.get("spark.graft.streaming.shufflePartitions", "8"))
     if (mode == "dist")
-      spark.conf.set("spark.graft.streaming.driverResolve.pairsCap", "0")
+      spark.conf.set(graft.operators.DriverResolve.Key, "false")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "lang", "text")
     docs.count() // sponge
 

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Static-HTML twin of the reference's Dash dashboard
   * (`DataAnalysis.py:59-165`): the three standing queries — average
@@ -216,18 +217,14 @@ object FuelDashboard {
        |</body></html>""".stripMargin
   }
 
-  /** Render from the warehouse frames. `maxStations` caps the table
-    * (LIMIT pushed into the plan, not a driver-side cut).
-    * `precomputedQMap` lets a caller that already ran the flagship
-    * join (the pipeline's live view) reuse it instead of paying the
-    * broadcast join + string-agg twice per tick.
+  /** Render from the warehouse frames. `maxStations` caps the station
+    * table.
     */
   def render(
       prices: DataFrame,
       stations: DataFrame,
       maxStations: Int = 20,
       generatedAt: String = "n/a",
-      precomputedQMap: Option[DataFrame] = None,
       refreshSecs: Int = 0): String = {
     val bar = FuelQueries.qBar(prices)
       .orderBy("fueltype")
@@ -244,22 +241,26 @@ object FuelDashboard {
       .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (ft, xs) => ft -> xs.map(x => (x._2, x._3)).toSeq }
-    val qmap = precomputedQMap.getOrElse(FuelQueries.qMap(stations, prices))
-    val stationRows = qmap
-      .orderBy("name").limit(maxStations)
-      .select(col("name"), col("brand"),
-        regexp_replace(col("fuelinfo_agg"), "<br>", "; ").as("prices"))
-      .collect().map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
-    // Map payload: every station with coordinates (presentation-
-    // bounded — |stations|, the same cardinality the reference ships
-    // into scatter_mapbox), hover = the reference's hover_data set.
-    val geo = qmap
-      .filter(col("location_latitude").isNotNull && col("location_longitude").isNotNull)
-      .select(col("location_longitude").cast("double"),
+    // ONE Q-map execution feeds both the map and the station table:
+    // the map payload is every station (presentation-bounded —
+    // |stations|, the same cardinality the reference ships into
+    // scatter_mapbox), so the table's sort + cut runs on the driver
+    // over the same rows, in Spark's `orderBy` order (nulls first,
+    // UTF-8 byte order).
+    val fuelPrices = regexp_replace(col("fuelinfo_agg"), "<br>", "; ")
+    val qmap = FuelQueries.qMap(stations, prices)
+      .select(col("name"), col("brand"), fuelPrices.as("prices"),
+        col("location_longitude").cast("double"),
         col("location_latitude").cast("double"),
-        concat_ws(" — ", col("name"), col("brand"), col("address"),
-          regexp_replace(col("fuelinfo_agg"), "<br>", "; ")))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getString(2))).toSeq
+        // hover = the reference's hover_data set
+        concat_ws(" — ", col("name"), col("brand"), col("address"), fuelPrices))
+      .collect()
+    val nameOrder = graft.operators.DriverResolve.sparkOrdering(StringType).get
+    val stationRows = qmap.sortBy(r => Option(r.get(0)))(Ordering.Option(nameOrder))
+      .take(maxStations)
+      .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
+    val geo = qmap.filter(r => !r.isNullAt(3) && !r.isNullAt(4))
+      .map(r => (r.getDouble(3), r.getDouble(4), r.getString(5))).toSeq
     html(bar, line, Seq("station", "brand", "latest prices"), stationRows, generatedAt,
       refreshSecs, geo)
   }

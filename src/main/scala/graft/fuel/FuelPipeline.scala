@@ -178,10 +178,12 @@ object FuelPipeline {
       .trigger(Trigger.ProcessingTime(1000L))
       .start()
 
-    // Dashboard live view: the standing Q-bar aggregation, complete
-    // mode, 1 s trigger (St5) — incremental, not recompute-per-tick.
+    // Dashboard live view: the standing Q-bar aggregation (the batch
+    // query over the stream), complete mode, 1 s trigger (St5) —
+    // incremental, not recompute-per-tick; a running mean over all
+    // messages ever received, without unbounded driver memory.
     val live = StreamOps.liveView(
-      StreamOps.qBarStream(prices.valid), "fuel_qbar_live", 1000L)
+      FuelQueries.qBar(prices.valid), "fuel_qbar_live", 1000L)
 
     // Live Q-map: the flagship join needs the *current* station
     // dimension per tick, so it runs as a per-micro-batch batch query
@@ -203,15 +205,15 @@ object FuelPipeline {
           qm.createOrReplaceTempView("fuel_qmap_live")
           // Live dashboard: atomically republish the static-HTML twin
           // each tick — the engine-side equivalent of the reference's
-          // Dash interval callback (`DataAnalysis.py:73-89`). The
-          // flagship join is reused, not recomputed; a failed publish
-          // is best-effort (same posture as the readTable guards) —
-          // it must not kill the streaming query.
+          // Dash interval callback (`DataAnalysis.py:73-89`). The view
+          // above is lazy, so the render runs the flagship join itself
+          // (once per render); a failed publish is best-effort (same
+          // posture as the readTable guards) — it must not kill the
+          // streaming query.
           dashboardPath.foreach { p =>
             try FuelDashboard.writeAtomic(p, FuelDashboard.render(
               pricesNow, stationsNow,
               generatedAt = java.time.Instant.now().toString,
-              precomputedQMap = Some(qm),
               // browser polls the republished file ≈ the Dash
               // interval callback's live refresh
               refreshSecs = 2))

@@ -866,23 +866,26 @@ object Dedup {
     * Adaptive execution: the pair list is materialized once (it is
     * typically the upstream LSH candidate join — without the cut the
     * label loop would re-run that join per iteration), which makes
-    * counting it free. At or below `driverMaxEdges` pairs the exact
-    * component closure runs as union-find on the driver — near-dup
-    * edge lists are tiny relative to the corpus, and the distributed
-    * loop's per-iteration jobs cost more than the whole graph —
-    * then returns as a local relation downstream joins broadcast.
+    * counting it free. At or below 1M pairs the exact component
+    * closure runs as union-find on the driver (a [[DriverResolve]]
+    * site; `spark.graft.driverResolve=false` forces the loop) —
+    * near-dup edge lists are tiny relative to the corpus, and the
+    * distributed loop's per-iteration jobs cost more than the whole
+    * graph — then returns as a local relation downstream joins
+    * broadcast.
     * Above the bound (dup-heavy corpora at the 100 TB design point)
-    * the distributed min-label loop below takes over. The default
-    * bound (1M pairs) is a DRIVER-HEAP cap, caller-tunable: the
-    * union-find map holds up to 2 boxed entries per edge at ~50 B
-    * each (~100–200 MB at the default), and the edges stream in via
-    * `toLocalIterator` so no collected row array sits next to it.
+    * the distributed min-label loop below takes over. The bound is a
+    * DRIVER-HEAP cap: the union-find map holds up to 2 boxed entries
+    * per edge at ~50 B each (~100–200 MB at the cap), and the edges
+    * stream in via `toLocalIterator` so no collected row array sits
+    * next to it.
     *
     * Id types: any orderable id column works (string/UUID doc ids
-    * included — "minimum id" is the type's own ordering). Integral
-    * ids additionally get a cast-to-long fast path on the driver and
-    * an exact monotone label-sum fixpoint check in the distributed
-    * loop; other types use an exact changed-label count (one extra
+    * included — "minimum id" is the type's own ordering, as Spark's
+    * `min` defines it). Integral and string ids take the driver path
+    * ([[DriverResolve.sparkOrdering]]); integral ids additionally get an
+    * exact monotone label-sum fixpoint check in the distributed loop;
+    * other types use an exact changed-label count (one extra
     * (id,label) join per iteration).
     *
     * Distributed path: min-label propagation WITH pointer jumping —
@@ -912,10 +915,7 @@ object Dedup {
     * generous default free for converged graphs (the loop exits the
     * round after convergence regardless of the bound).
     */
-  def connectedComponents(
-      pairs: DataFrame,
-      maxIter: Int = 16,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 16): DataFrame = {
     import org.apache.spark.sql.types._
     val idType = pairs.schema(pairs.columns.indexOf("id_a")).dataType
     val integral = idType match {
@@ -932,11 +932,17 @@ object Dedup {
     val p = Materialize(pairs
       .select(endpoint("id_a").as("src"), endpoint("id_b").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull))
-    val driverable = integral || idType == StringType
-    if (driverable) {
-      val edgeCount = p.count()
-      if (edgeCount <= driverMaxEdges) return driverComponents(p, idType, edgeCount)
-    }
+    if (DriverResolve.enabled(p.sparkSession))
+      DriverResolve.sparkOrdering(idType) match {
+        case None => DriverResolve.fellBack(ccDriverSite, "ineligible")
+        case Some(ord) =>
+          val edgeCount = p.count()
+          if (edgeCount <= ccDriverMaxEdges) {
+            DriverResolve.engaged(ccDriverSite)
+            return driverComponents(p, idType, ord, edgeCount)
+          }
+          DriverResolve.fellBack(ccDriverSite, "over cap")
+      }
     val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
     var labels = Materialize(edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")))
@@ -996,16 +1002,13 @@ object Dedup {
     labels
   }
 
-  /** Exact component closure on the driver: union-find with path
-    * compression, union by MIN root — so every root IS its
-    * component's minimum id, matching the distributed loop's label
-    * contract. Works for any orderable id type (long fast path for
-    * integral ids, generic ordering otherwise). Input is the
-    * materialized (src, dst) pair frame, pre-bounded by the caller
-    * and, past [[collectMaxEdges]], streamed in
-    * partition-by-partition (`toLocalIterator`) so
-    * the union-find map is the only edge-proportional driver
-    * allocation. Output is a local relation (sorted by id for
+  /** Exact component closure on the driver: the shared min-label
+    * [[DriverResolve.UnionFind]], so every root IS its component's
+    * minimum id, matching the distributed loop's label contract.
+    * Input is the materialized (src, dst) pair frame, pre-bounded by
+    * the caller and, past [[collectMaxEdges]], streamed in
+    * partition-by-partition (`toLocalIterator`) so the union-find map
+    * is the only edge-proportional driver allocation. Output is a local relation (sorted by id for
     * determinism) that downstream anti-joins broadcast.
     */
   // Above this edge count the driver path streams partitions via
@@ -1018,43 +1021,25 @@ object Dedup {
   // (round 19; the gates call this every batch).
   private val collectMaxEdges: Long = 1L << 17
 
+  // The driver path's edge bound (the 1M-pair heap cap above).
+  private val ccDriverMaxEdges: Long = 1L << 20
+
+  /** [[connectedComponents]]' name in the [[DriverResolve]] registry. */
+  private[graft] val ccDriverSite = "Dedup.connectedComponents"
+
   private def driverComponents(
       p: DataFrame, idType: org.apache.spark.sql.types.DataType,
-      edgeCount: Long): DataFrame = {
+      ord: Ordering[Any], edgeCount: Long): DataFrame = {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
     val spark = p.sparkSession
-    // Ordering must match Spark's own `min` semantics for the type —
-    // integral/long and UTF8 string cover every realistic doc id;
-    // anything else routes through the distributed loop (see caller)
-    // or lands here only via an explicit driverMaxEdges override.
-    val ord: Ordering[Any] = (idType match {
-      case ByteType | ShortType | IntegerType | LongType => Ordering.Long.on[Any](_.asInstanceOf[Long])
-      case StringType => Ordering.String.on[Any](_.asInstanceOf[String])
-      case other => throw new IllegalArgumentException(
-        s"driver union-find supports integral and string ids, got $other — " +
-          "use the distributed loop (driverMaxEdges = 0) for this id type")
-    })
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
+    val uf = new DriverResolve.UnionFind(ord)
     val edgeIter =
       if (edgeCount <= collectMaxEdges) p.collect().iterator
       else p.toLocalIterator().asScala
-    edgeIter.foreach { row =>
-      val a = row.get(0); val b = row.get(1)
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ord.lt(ra, rb)) parent(rb) = ra
-      else if (ord.lt(rb, ra)) parent(ra) = rb
-    }
+    edgeIter.foreach(row => uf.union(row.get(0), row.get(1)))
     val outType = if (idType == StringType) StringType else LongType
-    val rows = parent.keys.toSeq.sorted(ord).map(id => org.apache.spark.sql.Row(id, find(id)))
+    val rows = uf.ids.toSeq.sorted(ord).map(id => org.apache.spark.sql.Row(id, uf.find(id)))
     spark.createDataFrame(rows.asJava,
       StructType(Seq(StructField("id", outType), StructField("component", outType))))
   }

@@ -141,21 +141,15 @@ object Frontier {
     * body are file-order duplicates and also preserved.
     */
   // Driver-layer cap for [[expandSitemaps]] (round 20 — the round-19
-  // verdict's item 4): sitemap LAYERS are sitemap-cardinality
-  // (thousands of rows per million pages — the operator scaladoc), so
-  // the per-depth frontier fits on the driver by domain shape; the
-  // cap bounds the collect anyway (take cap+1, overflow → the
-  // unchanged distributed loop from scratch) and 0 disables the
-  // driver form outright (parity specs force the distributed path
-  // this way).
-  private val sitemapDriverCapKey = "spark.graft.frontier.sitemapDriverCap"
-  private val defaultSitemapDriverCap = 1L << 20
+  // verdict's item 4; a [[DriverResolve]] site): sitemap LAYERS are
+  // sitemap-cardinality (thousands of rows per million pages — the
+  // operator scaladoc), so the per-depth frontier fits on the driver
+  // by domain shape; the cap bounds the collect anyway (capped take,
+  // overflow → the unchanged distributed loop from scratch).
+  private val sitemapLayerCap = 1 << 20
 
-  /** Spec hook: driver-layer expansions this JVM — parity tests
-    * assert the fast path engaged (the SigGate counter discipline).
-    */
-  private[graft] val sitemapDriverExpanded =
-    new java.util.concurrent.atomic.AtomicLong
+  /** This fast path's name in the [[DriverResolve]] registry. */
+  private[graft] val DriverSite = "Frontier.expandSitemaps"
 
   def expandSitemaps(
       roots: DataFrame,
@@ -170,22 +164,11 @@ object Frontier {
       .select(Urls.surt(col(bodyUrlCol)).as("__sk"), col(xmlCol).as("__xml"))
       .filter(col("__sk") =!= "")
       .groupBy("__sk").agg(min(col("__xml")).as("__xml")))
-    val cap = spark.conf.getOption(sitemapDriverCapKey)
-      .map(_.toLong).getOrElse(defaultSitemapDriverCap)
     val driven =
-      if (cap > 0)
-        expandSitemapsDriver(roots, urlCol, byKey, maxDepth,
-          math.min(cap, (Int.MaxValue - 2).toLong))
+      if (DriverResolve.enabled(spark))
+        expandSitemapsDriver(roots, urlCol, byKey, maxDepth)
       else None
-    driven.getOrElse {
-      if (cap > 0)
-        org.slf4j.LoggerFactory.getLogger("graft.Frontier").warn(
-          "expandSitemaps: a sitemap layer overran " +
-            s"$sitemapDriverCapKey=$cap — re-running the distributed " +
-            "expansion (raise the cap if sitemap frontiers really are " +
-            "this large)")
-      expandSitemapsDistributed(roots, urlCol, byKey, maxDepth)
-    }
+    driven.getOrElse(expandSitemapsDistributed(roots, urlCol, byKey, maxDepth))
   }
 
   /** The DRIVER-LAYER expansion (round 20): each depth's sitemap
@@ -205,14 +188,13 @@ object Frontier {
       roots: DataFrame,
       urlCol: String,
       byKey: DataFrame,
-      maxDepth: Int,
-      cap: Long): Option[DataFrame] = {
+      maxDepth: Int): Option[DataFrame] = {
     val spark = roots.sparkSession
     import scala.jdk.CollectionConverters._
     def takeLayer(df: DataFrame): Option[Seq[String]] = {
-      val rows = df.limit(cap.toInt + 1).collect()
-      if (rows.length > cap) None
-      else Some(rows.toSeq.map(_.getString(0)))
+      val rows = DriverResolve.take(df, sitemapLayerCap)
+      if (rows.isEmpty) DriverResolve.fellBack(DriverSite, "over cap")
+      rows.map(_.toSeq.map(_.getString(0)))
     }
     def layerDf(surts: Seq[String]): DataFrame =
       spark.createDataFrame(
@@ -259,7 +241,7 @@ object Frontier {
         }
       }
     }
-    sitemapDriverExpanded.incrementAndGet()
+    DriverResolve.engaged(DriverSite)
     // same release discipline as the distributed form: soft-release
     // the body cut (no-op in local mode; in persist mode the lazy
     // page layers recompute through lineage if consumed late)

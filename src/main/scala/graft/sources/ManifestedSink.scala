@@ -49,12 +49,11 @@ object ManifestedSink {
   // the suite's biggest unattacked cost (round-19 verdict item 1).
   // The cache keeps the collected manifest rows between ticks, keyed
   // by manifest dir. CRASH-SAFE INVALIDATION: every use is guarded by
-  // a fingerprint of the live manifest dir's (name, mtime, length)
-  // listing — one fs listing, no Spark job — and manifest publishes
-  // write uniquely-named part files, so ANY out-of-band rewrite
-  // (another process, a crash-recovered stage promotion, a test
-  // poking at the dir) misses the fingerprint and falls back to the
-  // parquet read. The cache is only ever WRITTEN after a successful
+  // the live manifest dir's [[LeafFingerprint]] — one fs listing, no
+  // Spark job — and manifest publishes write uniquely-named part
+  // files, so ANY out-of-band rewrite (another process, a
+  // crash-recovered stage promotion, a test poking at the dir) misses
+  // the fingerprint and falls back to the parquet read. The cache is only ever WRITTEN after a successful
   // publish, from the exact rows just published.
   private final case class CachedManifest(
       fingerprint: Set[(String, Long, Long)],
@@ -71,15 +70,6 @@ object ManifestedSink {
   // behavior) rather than browning out the driver.
   private val cacheMaxBytesKey = "spark.graft.manifest.cacheMaxBytes"
   private val defaultCacheMaxBytes = 256L << 20
-
-  private def manifestFingerprint(
-      fs: FileSystem, manifestDir: String): Set[(String, Long, Long)] = {
-    val p = new Path(manifestDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).toSet
-  }
 
   private def rowBytes(r: org.apache.spark.sql.Row): Long = {
     var b = 64L
@@ -156,7 +146,7 @@ object ManifestedSink {
     val prior: Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] =
       Option(manifestCache.get(manifestDir))
-        .filter(_.fingerprint == manifestFingerprint(mfs, manifestDir)) match {
+        .filter(_.fingerprint == LeafFingerprint(spark, manifestDir)) match {
         case Some(c) => Some((c.schema, c.rows))
         case None =>
           manifestCache.remove(manifestDir)
@@ -222,7 +212,7 @@ object ManifestedSink {
     val bytes = next._2.iterator.map(rowBytes).sum
     if (bytes <= maxBytes)
       manifestCache.put(manifestDir, CachedManifest(
-        manifestFingerprint(mfs, manifestDir), next._1, next._2, bytes))
+        LeafFingerprint(spark, manifestDir), next._1, next._2, bytes))
     else manifestCache.remove(manifestDir)
     ()
   }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.operators.DriverResolve
+import graft.sources.LeafFingerprint
+
 /** Streaming per-group TOKEN-budget gate — the streaming form of
   * [[graft.operators.Sampling.tokenBudgetPerGroup]]: as documents
   * arrive, each group (language, source, domain …) keeps accepting
@@ -35,11 +38,10 @@ import org.apache.spark.sql.types._
   * scale). The per-batch work is one grouped window over the batch
   * plus a broadcast-sized state join: no corpus-wide anything.
   *
-  * DRIVER FAST PATH (round 20 — the round-19 verdict's item 2, the
-  * [[SigGate]] driver-resolve discipline): a micro-batch whose narrow
-  * `(group, idHash, id, tokens)` projection fits under
-  * `spark.graft.streaming.budgetDriverResolve.rowsCap` (default 2^16
-  * rows ≈ a few MB; 0 disables) resolves acceptance ON THE DRIVER —
+  * DRIVER FAST PATH (round 20 — the round-19 verdict's item 2, one
+  * of the [[graft.operators.DriverResolve]] sites): a micro-batch
+  * whose narrow `(group, idHash, id, tokens)` projection fits under
+  * 2^16 rows (≈ a few MB) resolves acceptance ON THE DRIVER —
   * the same `(idHash(id), id)` order, the same running sums, the
   * same `prior + cum − tokens < budget` test, all over values Spark
   * itself computed in the collected projection — and broadcasts the
@@ -48,7 +50,7 @@ import org.apache.spark.sql.types._
   * broadcast-prior build (≈10 fixed scheduler round-trips measured
   * per ~200-doc tick). Guards: LONG-castable integral ids + STRING
   * groups only, no null and no duplicate ids (either falls back), and
-  * the batch-size probe is an incremental `limit(cap+1)` take, so an
+  * the batch-size probe is the capped [[DriverResolve.take]], so an
   * over-cap batch costs one short-circuited scan before routing to
   * the unchanged distributed path. Acceptance and state output are
   * BIT-IDENTICAL either way (BudgetGateDriverResolveSpec pins parity
@@ -59,10 +61,11 @@ import org.apache.spark.sql.types._
   * re-aggregated the whole state table for a map this gate itself
   * just wrote. The driver now memoizes cumulative per-group spend
   * through the last committed batch, keyed by state dir and guarded
-  * by (expected next batch id, state-dir listing fingerprint) — a
-  * restart, a replayed batch id, or ANY out-of-band state rewrite
-  * misses the guard and falls back to the parquet aggregate. Both
-  * resolution paths use it.
+  * by (expected next batch id, [[graft.sources.LeafFingerprint]] of
+  * the state dir) — a restart, a replayed batch id, or ANY
+  * out-of-band state rewrite (a part file rewritten in place
+  * included) misses the guard and falls back to the parquet
+  * aggregate. Both resolution paths use it.
   */
 object BudgetGate {
 
@@ -71,20 +74,15 @@ object BudgetGate {
     StructField("spent_delta", LongType),
     StructField("batch_id", LongType)))
 
-  private val rowsCapKey = "spark.graft.streaming.budgetDriverResolve.rowsCap"
-  private val defaultRowsCap = 1L << 16
+  private val rowsCap = 1 << 16
 
-  /** Spec hook: number of batches resolved on the driver this JVM —
-    * parity tests assert the fast path actually ENGAGED (a silently
-    * declining route would make driver-vs-distributed comparisons
-    * vacuous; round-19 advice).
-    */
-  private[graft] val driverResolved = new java.util.concurrent.atomic.AtomicLong
+  /** This fast path's name in the [[DriverResolve]] registry. */
+  private[graft] val DriverSite = "BudgetGate"
 
   // ---- prior-spent memo ----
   private final case class PriorMemo(
       nextBatchId: Long,
-      fingerprint: Set[(String, Long)],
+      fingerprint: Set[(String, Long, Long)],
       spent: Map[String, Long])
 
   private val priorCache =
@@ -92,18 +90,6 @@ object BudgetGate {
 
   /** Test/ops hook: drop every memoized prior (fresh-JVM state). */
   private[graft] def invalidatePriorCache(): Unit = priorCache.clear()
-
-  // (batch-partition dir name, mtime) pairs — rewrites of a replayed
-  // partition change the dir's mtime, new batches change the name set
-  private def stateFingerprint(
-      spark: SparkSession, stateDir: String): Set[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(s => (s.getPath.getName, s.getModificationTime)).toSet
-  }
 
   /** Per-group spend over batches strictly before `batchId` — memo
     * hit: zero jobs; miss: the old one-aggregate read. Null groups
@@ -114,7 +100,7 @@ object BudgetGate {
       spark: SparkSession, stateDir: String, batchId: Long): Map[String, Long] = {
     val memo = Option(priorCache.get(stateDir)).filter(m =>
       m.nextBatchId == batchId &&
-        m.fingerprint == stateFingerprint(spark, stateDir))
+        m.fingerprint == LeafFingerprint(spark, stateDir))
     memo match {
       case Some(m) => m.spent
       case None =>
@@ -135,7 +121,7 @@ object BudgetGate {
       else acc.updated(g, Math.addExact(acc.getOrElse(g, 0L), d))
     }
     priorCache.put(stateDir,
-      PriorMemo(batchId + 1, stateFingerprint(spark, stateDir), merged))
+      PriorMemo(batchId + 1, LeafFingerprint(spark, stateDir), merged))
     ()
   }
 
@@ -178,21 +164,21 @@ object BudgetGate {
       require(!batch.columns.contains(c),
         s"BudgetGate: input must not carry the staging column '$c'"))
     val spark = batch.sparkSession
-    val rowsCap = math.min(
-      spark.conf.getOption(rowsCapKey).map(_.toLong).getOrElse(defaultRowsCap),
-      (Int.MaxValue - 2).toLong)
     val idIntegral = batch.schema(batch.columns.indexOf(idCol)).dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    val driverable = rowsCap > 0 && idIntegral &&
+    val driverable = idIntegral &&
       batch.schema(batch.columns.indexOf(groupCol)).dataType == StringType
     val prior = priorSpent(spark, stateDir, batchId)
     val driverResult =
-      if (driverable)
+      if (!DriverResolve.enabled(spark)) None
+      else if (!driverable) {
+        DriverResolve.fellBack(DriverSite, "ineligible")
+        None
+      } else
         acceptBatchDriver(batch, batchId, groupCol, idCol, tokensCol,
-          stateDir, budget, prior, rowsCap)
-      else None
+          stateDir, budget, prior)
     driverResult.getOrElse(
       acceptBatchDistributed(batch, batchId, groupCol, idCol, tokensCol,
         stateDir, budget, prior))
@@ -274,23 +260,31 @@ object BudgetGate {
       tokensCol: String,
       stateDir: String,
       budget: Long,
-      prior: Map[String, Long],
-      rowsCap: Long): Option[DataFrame] = {
+      prior: Map[String, Long]): Option[DataFrame] = {
     val spark = batch.sparkSession
     import scala.jdk.CollectionConverters._
-    val rows = batch.select(
+    val rows = DriverResolve.take(batch.select(
         col(groupCol).as("__g"),
         graft.operators.Sampling.idHash(col(idCol)).as("__h"),
         col(idCol).cast("long").as("__i"),
-        coalesce(col(tokensCol).cast("long"), lit(0L)).as("__t"))
-      .limit(rowsCap.toInt + 1)
-      .collect()
-    if (rows.length > rowsCap) return None
+        coalesce(col(tokensCol).cast("long"), lit(0L)).as("__t")),
+      rowsCap) match {
+      case Some(r) => r
+      case None =>
+        DriverResolve.fellBack(DriverSite, "over cap")
+        return None
+    }
     val seen = new java.util.HashSet[java.lang.Long]()
     var k = 0
     while (k < rows.length) {
-      if (rows(k).isNullAt(2)) return None
-      if (!seen.add(rows(k).getLong(2))) return None
+      if (rows(k).isNullAt(2)) {
+        DriverResolve.fellBack(DriverSite, "null id")
+        return None
+      }
+      if (!seen.add(rows(k).getLong(2))) {
+        DriverResolve.fellBack(DriverSite, "duplicate id")
+        return None
+      }
       k += 1
     }
     // per-group (idHash, id) order — both values Spark-computed; ids
@@ -344,7 +338,7 @@ object BudgetGate {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(stateDir)
     memoize(spark, stateDir, batchId, prior, deltas.toMap)
-    driverResolved.incrementAndGet()
+    DriverResolve.engaged(DriverSite)
     Some(acceptedOut)
   }
 

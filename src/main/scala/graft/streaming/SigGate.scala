@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Materialize}
+import graft.operators.{Dedup, DriverResolve, Materialize}
 
 /** The shared micro-batch acceptance core behind the streaming
   * near-dup gates — [[NearDupGate]] (MinHash signatures, text) and
@@ -48,10 +48,11 @@ private[graft] object SigGate {
   // observable, and the star semantics carry their own hash-exact
   // oracle rows (q_dedup_docs_star, q_stream_neardup_star, …).
 
-  // Driver-resolve fast path caps (round 19): a micro-batch whose F2
-  // probe estimates at most `pairsCap` intra-bucket candidate pairs
-  // AND at most `bandRowsCap` banded signature rows (docs × bands —
-  // the bound on what a collect of the batch side can return)
+  // Driver-resolve fast path caps (round 19; a [[DriverResolve]]
+  // site): a micro-batch whose F2 probe estimates at most `pairsCap`
+  // intra-bucket candidate pairs AND at most `bandRowsCap` banded
+  // signature rows (docs × bands — the bound on what a collect of
+  // the batch side can return)
   // resolves keepers ON THE DRIVER: the banded signature rows and
   // the state-match keeper minima are collected (two jobs — the
   // state join still runs distributed, once), candidate generation +
@@ -68,24 +69,17 @@ private[graft] object SigGate {
   // DECISION costs zero jobs; the F2 error band (25% std / measured
   // factor-2 worst case — F2ProbeSpec) only moves collect sizes,
   // never correctness (a hard in-loop candidate cap falls back to
-  // the distributed path if an estimate was badly wrong), and both
-  // caps are conf knobs so a deployment can retune or disable (0)
-  // them. Acceptance and state are BIT-IDENTICAL to the distributed
-  // path: the same (band, bucket) grouping (collected, not
-  // recomputed), the same verify arithmetic, the same min-label
-  // components and min-keeper chain collapse — pinned by
-  // SigGateDriverResolveSpec against the forced distributed form.
-  private val pairsCapKey = "spark.graft.streaming.driverResolve.pairsCap"
-  private val bandRowsCapKey = "spark.graft.streaming.driverResolve.bandRowsCap"
-  private val defaultPairsCap = 1L << 18
-  private val defaultBandRowsCap = 1L << 22
+  // the distributed path if an estimate was badly wrong). Acceptance
+  // and state are BIT-IDENTICAL to the distributed path: the same
+  // (band, bucket) grouping (collected, not recomputed), the same
+  // verify arithmetic, the same min-label components and min-keeper
+  // chain collapse — pinned by SigGateDriverResolveSpec against the
+  // forced distributed form (`spark.graft.driverResolve=false`).
+  private val pairsCap = 1L << 18
+  private val bandRowsCap = 1L << 22
 
-  /** Spec hook: batches resolved on the driver this JVM — parity
-    * tests assert the fast path actually ENGAGED, so a silently
-    * declining route can never make driver-vs-distributed comparisons
-    * vacuous (round-19 advice).
-    */
-  private[graft] val driverResolved = new java.util.concurrent.atomic.AtomicLong
+  /** This fast path's name in the [[DriverResolve]] registry. */
+  private[graft] val DriverSite = "SigGate"
 
   /** One micro-batch acceptance step over pre-banded signatures.
     *
@@ -153,28 +147,20 @@ private[graft] object SigGate {
       bandedSigs.select(col("doc_id"), col("sig")).dropDuplicates("doc_id"))
     val idType = bandedSigs.schema(
       bandedSigs.columns.indexOf("doc_id")).dataType
-    val driverableId = idType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
-    val pairsCap = spark.conf.getOption(pairsCapKey)
-      .map(_.toLong).getOrElse(defaultPairsCap)
-    val bandRowsCap = spark.conf.getOption(bandRowsCapKey)
-      .map(_.toLong).getOrElse(defaultBandRowsCap)
-    val small = driverableId && driverVerify.isDefined &&
-      pairsCap > 0 && bandRowsCap > 0 &&
-      probe.exists(e => e() <= pairsCap && e.bandRows() <= bandRowsCap)
+    val ord = DriverResolve.sparkOrdering(idType)
     val driverResult =
-      if (small)
+      if (!DriverResolve.enabled(spark)) None
+      else if (ord.isEmpty || driverVerify.isEmpty || probe.isEmpty) {
+        DriverResolve.fellBack(DriverSite, "ineligible")
+        None
+      } else if (probe.exists(e => e() > pairsCap || e.bandRows() > bandRowsCap)) {
+        DriverResolve.fellBack(DriverSite, "over cap")
+        None
+      } else
         acceptBatchDriver(batch, batchId, idCol, bandedSigs, state, matchCond,
-          stateDir, exact, compactDf, idType, driverVerify.get, starPairs,
-          hardPairsCap = math.max(pairsCap * 4, 1L << 20),
+          stateDir, exact, compactDf, idType, ord.get, driverVerify.get,
+          starPairs, hardPairsCap = math.max(pairsCap * 4, 1L << 20),
           compactBanded = compactBanded)
-      else None
     driverResult.getOrElse(
       acceptBatchDistributed(batch, batchId, idCol, bandedSigs, state,
         matchCond, intraPairs, stateDir, exact, compactDf))
@@ -256,8 +242,9 @@ private[graft] object SigGate {
     * predicate; a doc rejects iff its component touches state
     * (keeper = the earliest touched state keeper) or it is not its
     * component's min id. Returns None (fall back to the distributed
-    * path) if candidate generation overruns `hardPairsCap` — the
-    * probe estimate was pathologically low.
+    * path) on a null id or signature, or if candidate generation
+    * overruns `hardPairsCap` — the probe estimate was pathologically
+    * low.
     */
   private def acceptBatchDriver(
       batch: DataFrame,
@@ -270,6 +257,7 @@ private[graft] object SigGate {
       exact: Boolean,
       compactDf: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
+      ord: Ordering[Any],
       verify: (Any, Any) => Boolean,
       starPairs: Boolean,
       hardPairsCap: Long,
@@ -277,29 +265,6 @@ private[graft] object SigGate {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
     val spark = batch.sparkSession
-    val ord: Ordering[Any] = idType match {
-      // UTF-8 byte order, unsigned — UTF8String.compareTo's binary
-      // order, which is what the distributed min()/min_by hub/root
-      // selection uses; java.lang.String's UTF-16 order diverges for
-      // supplementary characters (round-19 advice)
-      case StringType => new Ordering[Any] {
-        def compare(a: Any, b: Any): Int = {
-          val ba = a.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val bb = b.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0
-          val n = math.min(ba.length, bb.length)
-          while (i < n) {
-            val d = (ba(i) & 0xFF) - (bb(i) & 0xFF)
-            if (d != 0) return d
-            i += 1
-          }
-          ba.length - bb.length
-        }
-      }
-      case _ => Ordering.Long.on[Any](_.asInstanceOf[Number].longValue)
-    }
     // job 1: the batch's signatures + band/bucket values. Preferred
     // form: the caller's per-doc compactBanded projection — each sig
     // collects ONCE with its banding array (÷bands bytes vs the
@@ -311,42 +276,37 @@ private[graft] object SigGate {
     val docSig = scala.collection.mutable.HashMap.empty[Any, Any]
     val groups = scala.collection.mutable.HashMap
       .empty[(Any, Any), scala.collection.mutable.ArrayBuffer[Any]]
-    var sawNullId = false
-    compactBanded match {
-      case Some(cb) =>
-        cb.collect().foreach { row =>
-          val id = row.get(0)
-          if (id == null) sawNullId = true
-          else {
-            docSig.update(id, row.get(1))
-            row.getSeq[org.apache.spark.sql.Row](2).foreach { b =>
-              groups.getOrElseUpdate((b.get(0), b.get(1)),
-                scala.collection.mutable.ArrayBuffer.empty[Any]) += id
-            }
-          }
-        }
-      case None =>
-        bandedSigs
-          .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-          .collect().foreach { row =>
-            val id = row.get(0)
-            if (id == null) sawNullId = true
-            else {
-              docSig.update(id, row.get(1))
-              groups.getOrElseUpdate((row.get(2), row.get(3)),
-                scala.collection.mutable.ArrayBuffer.empty[Any]) += id
-            }
-          }
+    val rows = compactBanded match {
+      case Some(cb) => cb.collect()
+      case None => bandedSigs
+        .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
+        .collect()
     }
-    if (sawNullId) {
-      // a null id NPEs local min/union-find, and the distributed path
-      // defines null semantics through join predicates (nulls never
-      // pair, exact-mode state drops them) — route out-of-contract
-      // batches there instead of replicating null algebra here
-      org.slf4j.LoggerFactory.getLogger("graft.SigGate").warn(
-        "driver-resolve: null doc_id in batch — falling back to the " +
-          "distributed resolution for this batch")
+    // A null id NPEs local min/union-find, and a null signature (or
+    // banding) NPEs the local verify; the distributed path defines
+    // null semantics through join predicates and explode (nulls never
+    // pair, exact-mode state drops them) — route out-of-contract
+    // batches there instead of replicating null algebra here.
+    val nullReason =
+      if (rows.exists(_.isNullAt(0))) Some("null doc_id")
+      else if (rows.exists(r => (1 until r.length).exists(r.isNullAt)))
+        Some("null signature")
+      else None
+    if (nullReason.isDefined) {
+      DriverResolve.fellBack(DriverSite, nullReason.get)
       return None
+    }
+    rows.foreach { row =>
+      val id = row.get(0)
+      docSig.update(id, row.get(1))
+      if (compactBanded.isDefined)
+        row.getSeq[org.apache.spark.sql.Row](2).foreach { b =>
+          groups.getOrElseUpdate((b.get(0), b.get(1)),
+            scala.collection.mutable.ArrayBuffer.empty[Any]) += id
+        }
+      else
+        groups.getOrElseUpdate((row.get(2), row.get(3)),
+          scala.collection.mutable.ArrayBuffer.empty[Any]) += id
     }
     val cand = scala.collection.mutable.HashSet.empty[(Any, Any)]
     var overflow = false
@@ -376,10 +336,7 @@ private[graft] object SigGate {
       }
     }
     if (overflow) {
-      org.slf4j.LoggerFactory.getLogger("graft.SigGate").warn(
-        s"driver-resolve: candidate generation overran hardPairsCap=" +
-          s"$hardPairsCap (probe underestimated) — falling back to the " +
-          "distributed resolution for this batch")
+      DriverResolve.fellBack(DriverSite, "candidate overflow")
       return None
     }
     val pairSeq = cand.iterator.filter { case (a, b) =>
@@ -390,22 +347,9 @@ private[graft] object SigGate {
       .select(col("a.doc_id").as("id"), col("s.keeper").as("k"))
       .groupBy("id").agg(min(col("k")).as("ext_keeper"))
       .collect()
-    // min-label union-find (the driverComponents discipline: union by
-    // min root, so every root is its component's minimum id)
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
-    pairSeq.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ord.lt(ra, rb)) parent(rb) = ra
-      else if (ord.lt(rb, ra)) parent(ra) = rb
-    }
+    // min-label union-find: every root is its component's minimum id
+    val uf = new DriverResolve.UnionFind(ord)
+    pairSeq.foreach { case (a, b) => uf.union(a, b) }
     // chain collapse: per component, the min ext keeper any member
     // touches (else the component root). Docs in neither structure
     // are untouched singletons — keeper = self, never rejected, so
@@ -416,9 +360,9 @@ private[graft] object SigGate {
       if (k != null) ext.update(row.get(0), k)
     }
     val compEk = scala.collection.mutable.HashMap.empty[Any, Any]
-    val involved = (parent.keysIterator ++ ext.keysIterator).toSet
+    val involved = (uf.ids ++ ext.keysIterator).toSet
     involved.foreach { id =>
-      val c = if (parent.contains(id)) find(id) else id
+      val c = uf.find(id)
       ext.get(id).foreach { k =>
         compEk.updateWith(c) {
           case Some(old) => Some(if (ord.lt(k, old)) k else old)
@@ -434,7 +378,7 @@ private[graft] object SigGate {
       if (outType == StringType) x
       else Long.box(x.asInstanceOf[Number].longValue)
     val rejectedSeq = involved.iterator.flatMap { id =>
-      val c = if (parent.contains(id)) find(id) else id
+      val c = uf.find(id)
       val keeper = compEk.getOrElse(c, c)
       if (keeper == id) None
       else Some(org.apache.spark.sql.Row(norm(id), norm(keeper)))
@@ -470,7 +414,7 @@ private[graft] object SigGate {
     // per tick). The distributed path keeps default partitioning —
     // its batches can be arbitrarily large.
     writeState(stateOut.coalesce(1), batchId, stateDir)
-    driverResolved.incrementAndGet()
+    DriverResolve.engaged(DriverSite)
     Some(accepted)
   }
 

@@ -28,24 +28,7 @@ object StreamOps {
     */
   def hwmGate(prices: Dataset[PriceRecord]): Dataset[PriceRecord] = {
     import prices.sparkSession.implicits._
-    prices
-      .groupByKey(p => (p.stationcode, p.fueltype))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: (String, String), rows: Iterator[PriceRecord], state: GroupState[Timestamp]) => {
-          val hwm = state.getOption
-          // Per micro-batch: sort by (event time, seq) like the
-          // reference's asc-sorted publish loop, emit strictly-newer,
-          // advance the mark.
-          val sorted = rows.toSeq.sortBy(p => (p.lastupdated.getTime, p.seq))
-          val emitted = sorted.iterator.scanLeft((hwm, Option.empty[PriceRecord])) {
-            case ((mark, _), p) =>
-              if (mark.forall(m => p.lastupdated.after(m)))
-                (Some(p.lastupdated), Some(p))
-              else (mark, None)
-          }.toSeq
-          emitted.lastOption.flatMap(_._1).foreach(state.update)
-          emitted.iterator.flatMap(_._2)
-        })
+    hwmGateBy(prices, p => (p.stationcode, p.fueltype))
   }
 
   /** The reference-exact GLOBAL high-water-mark (one mark for the
@@ -55,10 +38,19 @@ object StreamOps {
     */
   def hwmGateGlobal(prices: Dataset[PriceRecord]): Dataset[PriceRecord] = {
     import prices.sparkSession.implicits._
+    hwmGateBy(prices, _ => 0)
+  }
+
+  // One high-water mark per `key`: per micro-batch, sort by (event
+  // time, seq) like the reference's asc-sorted publish loop, emit
+  // strictly-newer, advance the mark.
+  private def hwmGateBy[K: org.apache.spark.sql.Encoder](
+      prices: Dataset[PriceRecord], key: PriceRecord => K): Dataset[PriceRecord] = {
+    import prices.sparkSession.implicits._
     prices
-      .groupByKey(_ => 0)
+      .groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Int, rows: Iterator[PriceRecord], state: GroupState[Timestamp]) => {
+        (_: K, rows: Iterator[PriceRecord], state: GroupState[Timestamp]) => {
           val hwm = state.getOption
           val sorted = rows.toSeq.sortBy(p => (p.lastupdated.getTime, p.seq))
           val emitted = sorted.iterator.scanLeft((hwm, Option.empty[PriceRecord])) {
@@ -106,15 +98,6 @@ object StreamOps {
       .queryName(name)
       .trigger(Trigger.ProcessingTime(intervalMs))
       .start()
-
-  /** Streaming Q-bar: same aggregation as the batch query, running
-    * mean over all messages ever received (complete mode — the
-    * reference's unbounded history, SURVEY §2 St4, without the
-    * unbounded driver memory).
-    */
-  def qBarStream(prices: DataFrame): DataFrame =
-    prices.groupBy("fueltype")
-      .agg(round(avg("price"), 2).as("avg_price"))
 
   /** Streaming latest-per-group (A3): `max_by` aggregation in update/
     * complete mode — `dropDuplicates` can't express *latest*

@@ -8,15 +8,13 @@ import graft.streaming.BudgetGate
   * resolution — same accepted sets, same per-group spent deltas, batch
   * by batch, including the budget-boundary rows, cross-batch spent
   * chaining, null groups and null token counts. The distributed form
-  * is forced by zeroing the rowsCap conf; the non-forced runs ASSERT
-  * the fast path engaged (via the routing counter), so the comparison
-  * can never be distributed-vs-distributed vacuity.
+  * is forced by switching the driver fast paths off; the non-forced
+  * runs ASSERT the fast path engaged (via the DriverResolve registry),
+  * so the comparison can never be distributed-vs-distributed vacuity.
   */
 class BudgetGateDriverResolveSpec extends SparkSpecBase {
 
   import spark.implicits._
-
-  private val rowsCapKey = "spark.graft.streaming.budgetDriverResolve.rowsCap"
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -38,10 +36,7 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
 
   private def run(forceDistributed: Boolean)
       : (Seq[Set[Long]], Set[(String, Long, Long)]) = {
-    val prev = spark.conf.getOption(rowsCapKey)
-    if (forceDistributed) spark.conf.set(rowsCapKey, "0")
-    val before = BudgetGate.driverResolved.get()
-    try {
+    val (out, counts) = withDriverResolve(on = !forceDistributed) {
       val state = tmp("bgdr_state")
       val accepted = batches.zipWithIndex.map { case (b, id) =>
         BudgetGate.acceptBatch(b, id.toLong, "grp_col", "doc_id",
@@ -52,19 +47,15 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
         .collect()
         .map(r => (if (r.isNullAt(0)) null else r.getString(0),
           r.getLong(1), r.getLong(2))).toSet
-      val resolved = BudgetGate.driverResolved.get() - before
-      if (forceDistributed)
-        assert(resolved === 0L, "forced-distributed run must never route to the driver")
-      else
-        assert(resolved === batches.size.toLong,
-          s"fast path must engage on every batch (engaged $resolved)")
       (accepted, stateRows)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(rowsCapKey, v)
-        case None => spark.conf.unset(rowsCapKey)
-      }
     }
+    val resolved = counts.getOrElse(BudgetGate.DriverSite, 0L)
+    if (forceDistributed)
+      assert(counts.isEmpty, s"forced-distributed run must never route to the driver: $counts")
+    else
+      assert(resolved === batches.size.toLong,
+        s"fast path must engage on every batch (engaged $resolved)")
+    out
   }
 
   test("driver-resolve ≡ distributed: accepted sets and state deltas, 3 chained batches") {
@@ -91,9 +82,7 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
     assert(a1r === a1)
     val a2 = step(batches(2), 2L)
     // full-distributed reference over the same sequence incl. replay
-    val prev = spark.conf.getOption(rowsCapKey)
-    spark.conf.set(rowsCapKey, "0")
-    try {
+    withDriverResolve(on = false) {
       val stateX = tmp("bgdr_replay_x")
       def stepX(b: org.apache.spark.sql.DataFrame, id: Long) =
         BudgetGate.acceptBatch(b, id, "grp_col", "doc_id", "n_tokens",
@@ -102,11 +91,6 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
       assert(stepX(batches(1), 1L) === a1)
       assert(stepX(batches(1), 1L) === a1)
       assert(stepX(batches(2), 2L) === a2)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(rowsCapKey, v)
-        case None => spark.conf.unset(rowsCapKey)
-      }
     }
   }
 
@@ -130,15 +114,53 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
     assert(a1.size === 2)
   }
 
+  test("a part file rewritten in place invalidates the prior memo (leaf fingerprint)") {
+    val state = tmp("bgdr_inplace")
+    def step(b: org.apache.spark.sql.DataFrame, id: Long) =
+      BudgetGate.acceptBatch(b, id, "grp_col", "doc_id", "n_tokens",
+        state, budget = 100L).select("doc_id").as[Long].collect().toSet
+    step(Seq((1L, Some("en"), Some(90L))).toDF("doc_id", "grp_col", "n_tokens"), 0L)
+    // another process rewrites batch 0's part file IN PLACE (same
+    // name, truncate + write, so the batch dir's entries and mtime
+    // stay as they were) with en's spend cut to 5
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def partOf(dir: Path): Path = Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq match {
+        case Seq(p) => p
+        case ps => fail(s"expected one part file in $dir, got $ps")
+      }
+    def crcOf(part: Path): Path =
+      part.resolveSibling(s".${part.getFileName}.crc")
+    val part = partOf(Paths.get(state, "batch_id=0"))
+    val scratch = tmp("bgdr_inplace_src")
+    Seq(("en", 5L)).toDF("grp", "spent_delta").coalesce(1)
+      .write.mode("overwrite").parquet(scratch)
+    val src = partOf(Paths.get(scratch))
+    Files.write(part, Files.readAllBytes(src))
+    // the checksum sidecar is rewritten in place too, or the reader
+    // rejects the new bytes
+    Files.write(crcOf(part), Files.readAllBytes(crcOf(src)))
+    val a1 = step(
+      Seq((2L, Some("en"), Some(90L)), (3L, Some("en"), Some(90L)))
+        .toDF("doc_id", "grp_col", "n_tokens"), 1L)
+    // the new prior is 5: the first row's before = 5 and the second's
+    // 95 both fit under 100 — the stale memo (prior 90) would have
+    // rejected the second
+    assert(a1 === Set(2L, 3L))
+  }
+
   test("non-driverable shapes route distributed: string ids, disabled cap") {
-    val before = BudgetGate.driverResolved.get()
-    val state = tmp("bgdr_str")
-    val b = Seq(("7", Some("en"), Some(40L)), ("8", Some("en"), Some(80L)))
-      .toDF("doc_id", "grp_col", "n_tokens")
-    val acc = BudgetGate.acceptBatch(b, 0L, "grp_col", "doc_id", "n_tokens",
-      state, budget = 100L).select("doc_id").as[String].collect().toSet
-    assert(BudgetGate.driverResolved.get() === before,
+    val (acc, counts) = withDriverResolve(on = true) {
+      val state = tmp("bgdr_str")
+      val b = Seq(("7", Some("en"), Some(40L)), ("8", Some("en"), Some(80L)))
+        .toDF("doc_id", "grp_col", "n_tokens")
+      BudgetGate.acceptBatch(b, 0L, "grp_col", "doc_id", "n_tokens",
+        state, budget = 100L).select("doc_id").as[String].collect().toSet
+    }
+    assert(counts.get(BudgetGate.DriverSite) === None,
       "string ids must not take the driver path (idHash cast/order semantics)")
+    assert(counts.get(s"${BudgetGate.DriverSite}/ineligible") === Some(1L))
     assert(acc.nonEmpty)
   }
 }

@@ -126,15 +126,19 @@ class DedupSpec extends SparkSpecBase {
     // maxIter=5 here (not the new default) proves the algorithm got
     // faster, not just the bound bigger.
     val chain = (1L to 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(chain, maxIter = 5, driverMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (comp, _) = withDriverResolve(on = false) {
+      Dedup.connectedComponents(chain, maxIter = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(comp === (1L to 9L).map(_ -> 1L).toMap)
   }
 
   test("distributed loop throws on non-convergence instead of under-merging") {
     val chain = (1L to 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val ex = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 1, driverMaxEdges = 0L).collect()
+      withDriverResolve(on = false) {
+        Dedup.connectedComponents(chain, maxIter = 1).collect()
+      }
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -147,16 +151,23 @@ class DedupSpec extends SparkSpecBase {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .toDF("id_a", "id_b")
-    def labels(viaDriver: Boolean) = Dedup.connectedComponents(
-        pairs, maxIter = 20, driverMaxEdges = if (viaDriver) Long.MaxValue else 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(viaDriver: Boolean) = {
+      val (out, counts) = withDriverResolve(on = viaDriver) {
+        Dedup.connectedComponents(pairs, maxIter = 20)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      assert(counts === (if (viaDriver) Map(Dedup.ccDriverSite -> 1L) else Map.empty))
+      out
+    }
     assert(labels(viaDriver = true) === labels(viaDriver = false))
   }
 
   test("connectedComponents truncates lineage per iteration (no upstream join replay)") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    // driverMaxEdges = 0 forces the distributed loop this spec pins.
-    val comp = Dedup.connectedComponents(pairs, maxIter = 5, driverMaxEdges = 0L)
+    // the switch off forces the distributed loop this spec pins.
+    val (comp, _) = withDriverResolve(on = false) {
+      Dedup.connectedComponents(pairs, maxIter = 5)
+    }
     // The returned frame must be a checkpointed scan, not a 5-deep
     // join tree: evaluating it (or iterating further) must not replay
     // the candidate-pair join once per iteration.
@@ -166,12 +177,31 @@ class DedupSpec extends SparkSpecBase {
 
   test("connectedComponents handles string ids on both paths (no long cast)") {
     val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id_a", "id_b")
-    def labels(viaDriver: Boolean) = Dedup.connectedComponents(
-        pairs, maxIter = 10, driverMaxEdges = if (viaDriver) Long.MaxValue else 0L)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def labels(viaDriver: Boolean) = withDriverResolve(on = viaDriver) {
+      Dedup.connectedComponents(pairs, maxIter = 10)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }._1
     val expect = Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x")
     assert(labels(viaDriver = true) === expect)
     assert(labels(viaDriver = false) === expect)
+  }
+
+  test("connectedComponents picks Spark's string minimum on the driver (UTF-8 byte order)") {
+    // "😀" (U+1F600, a surrogate pair in UTF-16) sorts BELOW "Ａ"
+    // (U+FF21) in UTF-16 but ABOVE it in UTF-8 bytes (F0… vs EF…);
+    // Spark's min — the distributed loop's label — uses the bytes
+    val pairs = Seq(("😀", "Ａ"), ("x", "y")).toDF("id_a", "id_b")
+    def labels(viaDriver: Boolean) = {
+      val (out, counts) = withDriverResolve(on = viaDriver) {
+        Dedup.connectedComponents(pairs, maxIter = 10)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      }
+      assert(counts === (if (viaDriver) Map(Dedup.ccDriverSite -> 1L) else Map.empty))
+      out
+    }
+    val expect = Map("😀" -> "Ａ", "Ａ" -> "Ａ", "x" -> "x", "y" -> "x")
+    assert(labels(viaDriver = false) === expect)
+    assert(labels(viaDriver = true) === expect)
   }
 
   test("batch auto-star: a dup-heavy corpus trips the switch with identical keepers; MaxValue pins all-pairs") {

@@ -289,27 +289,18 @@ class FrontierSpec extends SparkSpecBase {
       ("https://a.test/segC.xml", pages("https://a.test/p4")))
       .toDF("sm_url", "xml")
     val roots = Seq("https://a.test/root.xml").toDF("url")
-    val capKey = "spark.graft.frontier.sitemapDriverCap"
     def run(forceDistributed: Boolean, depth: Int): Seq[(String, String, Int)] = {
-      val prev = spark.conf.getOption(capKey)
-      if (forceDistributed) spark.conf.set(capKey, "0")
-      val before = Frontier.sitemapDriverExpanded.get()
-      try {
-        val out = Frontier
+      val (out, counts) = withDriverResolve(on = !forceDistributed) {
+        Frontier
           .expandSitemaps(roots, "url", bodies, "sm_url", "xml", depth)
           .collect()
           .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
           .sorted.toSeq
-        val engaged = Frontier.sitemapDriverExpanded.get() - before
-        if (forceDistributed) assert(engaged === 0L)
-        else assert(engaged === 1L, "the driver-layer form must engage")
-        out
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(capKey, v)
-          case None => spark.conf.unset(capKey)
-        }
       }
+      if (forceDistributed) assert(counts.isEmpty)
+      else assert(counts === Map(Frontier.DriverSite -> 1L),
+        "the driver-layer form must engage")
+      out
     }
     for (depth <- Seq(0, 2, 3, 5))
       assert(run(forceDistributed = false, depth)

@@ -42,7 +42,7 @@ class MaterializeSpec extends SparkSpecBase {
 
   test("persist mode: iterative CC releases superseded label frames (no cache leak)") {
     // A long chain forces several distributed min-label iterations
-    // (driverMaxEdges = 0 disables the driver fast path). Each
+    // (the driver-resolve switch off disables the driver fast path). Each
     // iteration Materializes a new label frame and must release the
     // previous one — a leak here only shows on long jobs, as pinned
     // blocks accumulating per iteration.
@@ -50,7 +50,9 @@ class MaterializeSpec extends SparkSpecBase {
     spark.conf.set(Materialize.ConfKey, "persist")
     try {
       val before = spark.sparkContext.getPersistentRDDs.size
-      val labels = Dedup.connectedComponents(chain, maxIter = 8, driverMaxEdges = 0L)
+      val (labels, _) = withDriverResolve(on = false) {
+        Dedup.connectedComponents(chain, maxIter = 8)
+      }
       assert(labels.select("component").distinct().count() >= 1L)
       val after = spark.sparkContext.getPersistentRDDs.size
       // Live frames: the materialized pair list + the final labels.

@@ -2,20 +2,30 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{Hamming64Gate, NearDupGate}
+import graft.streaming.{Hamming64Gate, NearDupGate, SigGate}
 
 /** The round-19 small-batch driver-resolve fast path
   * ([[graft.streaming.SigGate.acceptBatch]]): keeper resolution
   * collected + union-found on the driver must be BIT-IDENTICAL to the
   * distributed resolution — same accepted sets, same state contents
   * (keeper tags included), batch by batch, in both state modes. The
-  * distributed form is forced by zeroing the pairs cap conf.
+  * distributed form is forced by switching the driver fast paths off.
   */
 class SigGateDriverResolveSpec extends SparkSpecBase {
 
   import spark.implicits._
 
-  private val pairsCapKey = "spark.graft.streaming.driverResolve.pairsCap"
+  // the comparison must never be distributed-vs-distributed vacuity:
+  // assert the routing actually went where forced (round-19 advice)
+  private def assertRouted(counts: Map[String, Long], forceDistributed: Boolean,
+      batches: Int): Unit = {
+    val engaged = counts.getOrElse(SigGate.DriverSite, 0L)
+    if (forceDistributed)
+      assert(counts.isEmpty, s"forced-distributed run routed to the driver: $counts")
+    else
+      assert(engaged === batches.toLong,
+        s"fast path must engage on every batch (engaged $engaged)")
+  }
 
   private val baseA = "the quick brown fox jumps over the lazy dog tonight again"
   private val baseB = "distributed query engines shuffle data between stages for joins always"
@@ -42,10 +52,7 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
 
   private def runNearDup(exact: Boolean, forceDistributed: Boolean)
       : (Seq[Set[Long]], Set[(Long, Long, Long)]) = {
-    val prev = spark.conf.getOption(pairsCapKey)
-    if (forceDistributed) spark.conf.set(pairsCapKey, "0")
-    val engagedBefore = graft.streaming.SigGate.driverResolved.get()
-    try {
+    val (out, counts) = withDriverResolve(on = !forceDistributed) {
       val state = tmp("sgdr_state")
       val accepted = batches.zipWithIndex.map { case (b, id) =>
         NearDupGate.acceptBatch(b, id.toLong, "doc_id", "text", state,
@@ -55,22 +62,10 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
       val stateRows = NearDupGate.readState(spark, state)
         .select(col("doc_id"), col("keeper"), col("batch_id"))
         .as[(Long, Long, Long)].collect().toSet
-      // the comparison must never be distributed-vs-distributed
-      // vacuity: assert the routing actually went where forced
-      // (round-19 advice)
-      val engaged = graft.streaming.SigGate.driverResolved.get() - engagedBefore
-      if (forceDistributed)
-        assert(engaged === 0L, "forced-distributed run routed to the driver")
-      else
-        assert(engaged === batches.size.toLong,
-          s"fast path must engage on every batch (engaged $engaged)")
       (accepted, stateRows)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(pairsCapKey, v)
-        case None => spark.conf.unset(pairsCapKey)
-      }
     }
+    assertRouted(counts, forceDistributed, batches.size)
+    out
   }
 
   for (exact <- Seq(false, true))
@@ -85,31 +80,43 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
     }
 
   test("a null doc_id declines the driver path and matches the distributed semantics") {
-    def run(forceDistributed: Boolean): (Set[Long], Long) = {
-      val prev = spark.conf.getOption(pairsCapKey)
-      if (forceDistributed) spark.conf.set(pairsCapKey, "0")
-      val engagedBefore = graft.streaming.SigGate.driverResolved.get()
-      try {
-        val state = tmp("sgdr_null")
-        val b = Seq(Some(10L) -> baseA, Some(11L) -> baseA,
-            Option.empty[Long] -> baseA, Some(20L) -> baseB)
-          .toDF("doc_id", "text")
-        val acc = NearDupGate.acceptBatch(b, 0L, "doc_id", "text", state)
-          .select("doc_id").filter(col("doc_id").isNotNull)
-          .as[Long].collect().toSet
-        (acc, graft.streaming.SigGate.driverResolved.get() - engagedBefore)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(pairsCapKey, v)
-          case None => spark.conf.unset(pairsCapKey)
-        }
-      }
+    def run(forceDistributed: Boolean) = withDriverResolve(on = !forceDistributed) {
+      val state = tmp("sgdr_null")
+      val b = Seq(Some(10L) -> baseA, Some(11L) -> baseA,
+          Option.empty[Long] -> baseA, Some(20L) -> baseB)
+        .toDF("doc_id", "text")
+      NearDupGate.acceptBatch(b, 0L, "doc_id", "text", state)
+        .select("doc_id").filter(col("doc_id").isNotNull)
+        .as[Long].collect().toSet
     }
-    val (accD, engaged) = run(forceDistributed = false)
+    val (accD, counts) = run(forceDistributed = false)
     val (accX, _) = run(forceDistributed = true)
-    assert(engaged === 0L, "null ids must fall back to the distributed path")
+    assert(counts.get(SigGate.DriverSite) === None,
+      "null ids must fall back to the distributed path")
+    assert(counts.get(s"${SigGate.DriverSite}/null doc_id") === Some(1L))
     assert(accD === accX)
     assert(accD === Set(10L, 20L))
+  }
+
+  test("a null signature declines the driver path and matches the distributed semantics") {
+    // a null text has a null MinHash signature (and banding); the
+    // driver path used to NPE reading its bands and kill the batch
+    def run(forceDistributed: Boolean) = withDriverResolve(on = !forceDistributed) {
+      val state = tmp("sgdr_nullsig")
+      val b = Seq(10L -> Some(baseA), 11L -> Some(baseA),
+          12L -> Option.empty[String], 20L -> Some(baseB))
+        .toDF("doc_id", "text")
+      NearDupGate.acceptBatch(b, 0L, "doc_id", "text", state)
+        .select("doc_id").as[Long].collect().toSet
+    }
+    val (accD, counts) = run(forceDistributed = false)
+    val (accX, countsX) = run(forceDistributed = true)
+    assert(counts.get(SigGate.DriverSite) === None,
+      "null signatures must fall back to the distributed path")
+    assert(counts.get(s"${SigGate.DriverSite}/null signature") === Some(1L))
+    assert(countsX.isEmpty)
+    assert(accD === accX)
+    assert(accD === Set(10L, 12L, 20L))
   }
 
   test("estJaccardPassDriver ≡ the Column form over the full lane-match lattice") {
@@ -137,9 +144,7 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
 
   test("NearDupGate starIntra driver-resolve ≡ distributed") {
     def run(forceDistributed: Boolean) = {
-      val prev = spark.conf.getOption(pairsCapKey)
-      if (forceDistributed) spark.conf.set(pairsCapKey, "0")
-      try {
+      val (out, counts) = withDriverResolve(on = !forceDistributed) {
         val state = tmp("sgdr_star")
         // a 6-member exact-dup clique + a near-dup chain + uniques
         val clique = (100L to 105L).map(_ -> baseA)
@@ -155,12 +160,9 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
           .select(col("doc_id"), col("keeper"), col("batch_id"))
           .as[(Long, Long, Long)].collect().toSet
         (acc, st)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(pairsCapKey, v)
-          case None => spark.conf.unset(pairsCapKey)
-        }
       }
+      assertRouted(counts, forceDistributed, batches = 2)
+      out
     }
     val (accD, stateD) = run(forceDistributed = false)
     val (accX, stateX) = run(forceDistributed = true)
@@ -171,9 +173,7 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
 
   test("Hamming64Gate driver-resolve ≡ distributed") {
     def run(forceDistributed: Boolean) = {
-      val prev = spark.conf.getOption(pairsCapKey)
-      if (forceDistributed) spark.conf.set(pairsCapKey, "0")
-      try {
+      val (out, counts) = withDriverResolve(on = !forceDistributed) {
         val state = tmp("sgdr_h64")
         // sig families: identical longs dup; one-bit neighbors near-dup
         val b0 = Seq((10L, 0xDEADBEEFL), (11L, 0xDEADBEEFL ^ 1L),
@@ -188,12 +188,9 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
           .select(col("doc_id"), col("keeper"), col("batch_id"))
           .as[(Long, Long, Long)].collect().toSet
         (acc, st)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(pairsCapKey, v)
-          case None => spark.conf.unset(pairsCapKey)
-        }
       }
+      assertRouted(counts, forceDistributed, batches = 2)
+      out
     }
     val (accD, stateD) = run(forceDistributed = false)
     val (accX, stateX) = run(forceDistributed = true)
