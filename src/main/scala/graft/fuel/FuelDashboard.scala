@@ -3,9 +3,11 @@ package graft.fuel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+
+import graft.operators.DriverResolve
 
 /** Static-HTML twin of the reference's Dash dashboard
   * (`DataAnalysis.py:59-165`): the three standing queries — average
@@ -18,10 +20,14 @@ import org.apache.spark.sql.types.StringType
   * equivalent of the reference's per-interval Dash callback refresh.
   *
   * Scale note: everything collected here is presentation-bounded —
-  * ≤|fuel types| bar rows, ≤|fuel types|×|days| line points, and an
-  * explicit `LIMIT` on the station table. The heavy lifting (latest-
-  * per-group, joins) stays distributed in [[FuelQueries]]; only the
-  * chart-sized result crosses to the driver.
+  * ≤|fuel types| bar rows, ≤|fuel types|×|days| line points and
+  * |stations| Q-map rows, which feed both the map and the capped
+  * station table. The heavy lifting (aggregation, latest-per-group,
+  * joins) stays distributed; only the chart-sized result crosses to
+  * the driver, which also sets the charts' order. A refresh is one
+  * concurrent wave of three Spark actions on threads created per
+  * render, and the line chart aggregates the price rows directly,
+  * not the ordered [[FuelQueries.qLine]] (see [[render]]).
   *
   * Charts follow the data-viz method: one measure over categories →
   * single-hue bars (category identity lives on the axis); the
@@ -219,6 +225,16 @@ object FuelDashboard {
 
   /** Render from the warehouse frames. `maxStations` caps the station
     * table.
+    *
+    * One refresh is one concurrent wave of three Spark actions (bar,
+    * line, Q-map), each collected on a thread of its own
+    * ([[concurrently]]). The driver then puts the bars, the line series
+    * and the station table in Spark's `orderBy` order (nulls first,
+    * UTF-8 byte order), so no action pays a range-partitioned sort.
+    * The line aggregates `prices` itself, not [[FuelQueries.qLine]]:
+    * Catalyst keeps qLine's global Sort under a double `avg` (float
+    * sums depend on order), so every refresh would sort every price
+    * row and then discard that order.
     */
   def render(
       prices: DataFrame,
@@ -226,43 +242,68 @@ object FuelDashboard {
       maxStations: Int = 20,
       generatedAt: String = "n/a",
       refreshSecs: Int = 0): String = {
-    val bar = FuelQueries.qBar(prices)
-      .orderBy("fueltype")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
-    // Daily average per fuel type — the chart-sized reduction of
-    // qLine's full ordered series (which is a parity surface, not a
-    // plottable one).
-    val line = FuelQueries.qLine(prices)
+    val lineQ = prices
       .groupBy(col("fueltype"),
         date_trunc("day", col("lastupdated")).cast("timestamp").as("day"))
       .agg(avg("price").as("p"))
-      .orderBy("fueltype", "day")
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (ft, xs) => ft -> xs.map(x => (x._2, x._3)).toSeq }
     // ONE Q-map execution feeds both the map and the station table:
     // the map payload is every station (presentation-bounded —
     // |stations|, the same cardinality the reference ships into
     // scatter_mapbox), so the table's sort + cut runs on the driver
-    // over the same rows, in Spark's `orderBy` order (nulls first,
-    // UTF-8 byte order).
+    // over the same rows.
     val fuelPrices = regexp_replace(col("fuelinfo_agg"), "<br>", "; ")
-    val qmap = FuelQueries.qMap(stations, prices)
+    val qmapQ = FuelQueries.qMap(stations, prices)
       .select(col("name"), col("brand"), fuelPrices.as("prices"),
         col("location_longitude").cast("double"),
         col("location_latitude").cast("double"),
         // hover = the reference's hover_data set
         concat_ws(" — ", col("name"), col("brand"), col("address"), fuelPrices))
-      .collect()
-    val nameOrder = graft.operators.DriverResolve.sparkOrdering(StringType).get
-    val stationRows = qmap.sortBy(r => Option(r.get(0)))(Ordering.Option(nameOrder))
+    val Seq(barRows, lineRows, qmap) = concurrently(
+      "bar" -> FuelQueries.qBar(prices), "line" -> lineQ, "map" -> qmapQ)
+
+    val sparkOrder = Ordering.Option(DriverResolve.sparkOrdering(StringType).get)
+    val bar = barRows.sortBy(r => Option(r.get(0)))(sparkOrder)
+      .map(r => r.getString(0) -> r.getDouble(1)).toSeq
+    val line = lineRows
+      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
+      .groupBy(_._1).toSeq.sortBy(s => Option(s._1: Any))(sparkOrder)
+      .map { case (ft, xs) => ft -> xs.map(x => (x._2, x._3)).sortBy(_._1).toSeq }
+    val stationRows = qmap.sortBy(r => Option(r.get(0)))(sparkOrder)
       .take(maxStations)
       .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
     val geo = qmap.filter(r => !r.isNullAt(3) && !r.isNullAt(4))
       .map(r => (r.getDouble(3), r.getDouble(4), r.getString(5))).toSeq
     html(bar, line, Seq("station", "brand", "latest prices"), stationRows, generatedAt,
       refreshSecs, geo)
+  }
+
+  /** Collects each named frame on a thread created for this call
+    * (`graft-render-<name>`), joins them all, then returns the rows in
+    * argument order, or rethrows the first failure in argument order.
+    * Fresh threads, not a pool: Spark clones the caller's local
+    * properties (job group, scheduler pool, trace tags) into a thread
+    * when it is created, so only a fresh thread carries the caller's
+    * current ones to its jobs. An interrupt of the caller is passed to
+    * the workers, and the join still waits for them.
+    */
+  private def concurrently(frames: (String, DataFrame)*): Seq[Array[Row]] = {
+    val workers = frames.map { case (name, df) => new Collect(name, df) }
+    workers.foreach(_.start())
+    var interrupted = false
+    workers.foreach { w =>
+      while (w.isAlive)
+        try w.join()
+        catch { case _: InterruptedException => interrupted = true; workers.foreach(_.interrupt()) }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    workers.map(_.rows.fold(t => throw t, identity))
+  }
+
+  private final class Collect(name: String, df: DataFrame) extends Thread(s"graft-render-$name") {
+    setDaemon(true)
+    @volatile var rows: Either[Throwable, Array[Row]] = _
+    override def run(): Unit =
+      rows = try Right(df.collect()) catch { case t: Throwable => Left(t) }
   }
 
   /** Atomic publish: write to a temp sibling, then rename — readers

@@ -207,9 +207,11 @@ object FuelPipeline {
           // each tick — the engine-side equivalent of the reference's
           // Dash interval callback (`DataAnalysis.py:73-89`). The view
           // above is lazy, so the render runs the flagship join itself
-          // (once per render); a failed publish is best-effort (same
-          // posture as the readTable guards) — it must not kill the
-          // streaming query.
+          // (once per render), concurrently with the bar and line
+          // actions on threads it creates per call; they inherit this
+          // query's job group, so stopping the query cancels them. A
+          // failed publish is best-effort (same posture as the
+          // readTable guards) — it must not kill the streaming query.
           dashboardPath.foreach { p =>
             try FuelDashboard.writeAtomic(p, FuelDashboard.render(
               pricesNow, stationsNow,
