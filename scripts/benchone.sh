@@ -1,23 +1,6 @@
 #!/bin/bash
-# Fresh-JVM BenchOne via plain java (never sbt runMain mid-edit — a
-# broken working-tree compile silently kills the probe JVM; memory
-# note r18). Usage: scripts/benchone.sh <sfDir> <query>...
-# Env: SPARK_DRIVER_MEM (default 24g), SPARK_GRAFT_CPUS (default 32),
-# BENCH_CLASSES overrides the classes dir (for git-archive A/Bs).
-set -euo pipefail
-SF_DIR=$1; shift
-CLASSES=${BENCH_CLASSES:-/root/repo/target/scala-2.13/classes}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-24g} \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.BenchOne "$SF_DIR" "$@"
+# Fresh-JVM BenchOne (the one probe main): per-query time, driver-resolve
+# registry, per-job gaps and per-trigger phases. Usage:
+#   scripts/benchone.sh <sfDir> <query>...
+# Env and A/B switches: see scripts/proberun.sh.
+exec "$(dirname "$0")/proberun.sh" graft.BenchOne "$@"

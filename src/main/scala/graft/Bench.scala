@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main — times the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints the one-line JSON the driver
   * ingests as `BENCH_r{N}.json`.
@@ -25,20 +27,25 @@ package graft
   * phases (batch fully first) — see the note at the partition below.
   */
 object Bench {
+
+  /** One full execution of catalog query `name` into the noop sink —
+    * the run that [[Bench]], [[BenchOne]] and [[BenchServe]] time.
+    */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): Unit = {
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    // Streaming queries snapshot through uniquely-named memory-sink
+    // temp views; with 5+ timed runs each those snapshots would
+    // accumulate on the driver heap — drop them once consumed.
+    spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_stream_snap_"))
+      .foreach(spark.catalog.dropTempView)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
-
-    def runOnce(name: String): Unit = {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // Streaming queries snapshot through uniquely-named memory-sink
-      // temp views; with 5+ timed runs each those snapshots would
-      // accumulate on the driver heap — drop them once consumed.
-      spark.catalog.listTables().collect()
-        .map(_.name).filter(_.startsWith("graft_stream_snap_"))
-        .foreach(spark.catalog.dropTempView)
-    }
+    def runOnce(name: String): Unit = Bench.runOnce(spark, sfDir, name)
 
     // Two phases: all batch queries (warm-up + timing) complete BEFORE
     // the first streaming replay runs. The replays each drive dozens

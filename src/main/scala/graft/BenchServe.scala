@@ -25,9 +25,7 @@ object BenchServe {
       else Seq("q_knn_cosine", "q_binary_knn", "q_pq_knn", "q_ivf_pq_knn",
         "q_maxsim_rerank")
     val spark = GraftSession.get()
-    def runOnce(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def runOnce(name: String): Unit = Bench.runOnce(spark, sfDir, name)
     runOnce("q_fk_orphans") // startup sponge
     def pct(sorted: Vector[Double], p: Double): Double = {
       val i = math.ceil(p / 100.0 * sorted.size).toInt - 1

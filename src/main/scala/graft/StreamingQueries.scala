@@ -51,20 +51,19 @@ object StreamingQueries {
   // shipped as both TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS)
   // across testdata generations, so a regenerated-in-place dir in a
   // long-lived session would silently keep the WRONG by-schema ts
-  // normalization. Key on (dir, mtime, size) of the parquet file so a
-  // rewrite invalidates the entry (round-13 ADVICE).
-  private val eventsSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
-
+  // normalization. The [[graft.sources.LeafFingerprint]] cache keys it
+  // on the file's (name, mtime, size), so a rewrite misses (round-13
+  // ADVICE).
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val f = java.nio.file.Paths.get(d, "events.parquet")
-    val key = (d,
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.getLastModifiedTime(f).toMillis else 0L,
-      if (java.nio.file.Files.isRegularFile(f))
-        java.nio.file.Files.size(f) else 0L)
-    val schema = eventsSchemaCache.computeIfAbsent(key,
-      _ => s.read.parquet(s"$d/events.parquet").schema)
+    import graft.sources.LeafFingerprint
+    val f = s"$d/events.parquet"
+    val schema = LeafFingerprint
+      .cached[org.apache.spark.sql.types.StructType](s, "events.schema", f)
+      .getOrElse {
+        val read = s.read.parquet(f).schema
+        LeafFingerprint.cache(s, "events.schema", f, read, 2L * read.json.length)
+        read
+      }
     // Glob form: the file-stream source requires a directory basePath;
     // the corpus table is a single file, so glob it under its parent.
     val raw = s.readStream.schema(schema).parquet(s"$d/*events.parquet")

@@ -96,6 +96,33 @@ object FuelModel {
       StructField("price", DoubleType),
       StructField("lastupdated", StringType)))))))
 
+  /** The warehouse `prices` table [[FuelPipeline.start]] lands: the
+    * cleaned price columns ([[FuelCleaning.cleanPrices]]) plus the
+    * surrogate `id`. Declared, so a reader skips parquet schema
+    * inference — one Spark job per read.
+    */
+  val warehousePricesSchema: StructType = StructType(Seq(
+    StructField("stationcode", StringType),
+    StructField("fueltype", StringType),
+    StructField("price", DoubleType),
+    StructField("lastupdated", TimestampType),
+    StructField("seq", LongType),
+    StructField("id", LongType)))
+
+  /** The warehouse `stations` table: the cleaned station columns
+    * ([[FuelCleaning.cleanStations]]) plus the surrogate `id`.
+    */
+  val warehouseStationsSchema: StructType = StructType(Seq(
+    StructField("brandid", StringType),
+    StructField("stationid", StringType),
+    StructField("brand", StringType),
+    StructField("code", StringType),
+    StructField("name", StringType),
+    StructField("address", StringType),
+    StructField("location_latitude", DoubleType),
+    StructField("location_longitude", DoubleType),
+    StructField("id", LongType)))
+
   /** The reference's one-and-only timestamp format (day-first, no TZ). */
   val TsFormat = "dd/MM/yyyy HH:mm:ss"
 }

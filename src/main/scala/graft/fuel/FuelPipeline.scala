@@ -1,5 +1,8 @@
 package graft.fuel
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -133,6 +136,20 @@ object FuelPipeline {
       .start()
   }
 
+  /** The two warehouse tables (prices, stations) as `qmap_live` reads
+    * them each tick: with their declared schemas, so the read runs no
+    * Spark job. None until both table directories exist.
+    */
+  private[graft] def readWarehouse(
+      spark: SparkSession, warehouseDir: String): Option[(DataFrame, DataFrame)] = {
+    val (prices, stations) = (s"$warehouseDir/prices", s"$warehouseDir/stations")
+    val fs = new Path(warehouseDir).getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(new Path(prices)) && fs.exists(new Path(stations)))
+      Some((Warehouse.readTable(spark, prices, FuelModel.warehousePricesSchema),
+        Warehouse.readTable(spark, stations, FuelModel.warehouseStationsSchema)))
+    else None
+  }
+
   /** Wire and start the three streaming queries; returns them running. */
   def start(
       spark: SparkSession,
@@ -193,14 +210,7 @@ object FuelPipeline {
     val liveMap = prices.valid.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        val sp = spark
-        val stationsNow =
-          try Warehouse.readTable(sp, s"$warehouseDir/stations")
-          catch { case _: Throwable => null }
-        val pricesNow =
-          try Warehouse.readTable(sp, s"$warehouseDir/prices")
-          catch { case _: Throwable => null }
-        if (stationsNow != null && pricesNow != null) {
+        readWarehouse(spark, warehouseDir).foreach { case (pricesNow, stationsNow) =>
           val qm = FuelQueries.qMap(stationsNow, pricesNow)
           qm.createOrReplaceTempView("fuel_qmap_live")
           // Live dashboard: atomically republish the static-HTML twin
@@ -210,8 +220,8 @@ object FuelPipeline {
           // (once per render), concurrently with the bar and line
           // actions on threads it creates per call; they inherit this
           // query's job group, so stopping the query cancels them. A
-          // failed publish is best-effort (same posture as the
-          // readTable guards) — it must not kill the streaming query.
+          // failed publish is best-effort — it must not kill the
+          // streaming query (an interrupt from stop() still ends it).
           dashboardPath.foreach { p =>
             try FuelDashboard.writeAtomic(p, FuelDashboard.render(
               pricesNow, stationsNow,
@@ -219,7 +229,7 @@ object FuelPipeline {
               // browser polls the republished file ≈ the Dash
               // interval callback's live refresh
               refreshSecs = 2))
-            catch { case e: Throwable =>
+            catch { case NonFatal(e) =>
               System.err.println(s"[pipeline] dashboard publish failed: ${e.getMessage}")
             }
           }

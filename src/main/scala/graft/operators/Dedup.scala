@@ -598,21 +598,9 @@ object Dedup {
     (cut, est)
   }
 
-  /** [[sigsWithStarDecision]] with the COMPACT materialization — the
-    * minhash-family entry points' default since round 15. Takes the
-    * un-exploded `(doc_id, sig)` plan, returns the BANDED frame
-    * (re-derived post-cut) and the star decision.
-    */
-  private[graft] def sigsWithStarDecisionCompact(
-      compact: DataFrame, bands: Int, rows: Int,
-      force: Boolean, cap: Long): (DataFrame, Boolean) = {
-    val (cut, star) = sigsWithStarDecisionCut(compact, bands, rows, force, cap)
-    (bandExplode(cut, bands, rows), star)
-  }
-
-  /** [[sigsWithStarDecisionCompact]] returning the RAW compact cut
-    * (round 18): batch consumers hand it straight to
-    * [[candidatesFromCompact]]/[[starCandidatesFromCompact]], which
+  /** [[sigsWithStarDecision]] with the COMPACT materialization,
+    * returning the RAW compact cut (round 18): batch consumers hand
+    * it straight to [[candidatesFromCompact]]/[[starCandidatesFromCompact]], which
     * re-band only the sig-free pairing projection and verify off the
     * cut — the banded-frame form re-derived (and mostly discarded)
     * the full |docs|×bands explode once per consumer.

@@ -87,9 +87,10 @@ object Unigram {
     * `Σ_words len·min(len, maxPieceLen)`, the unit every trainer
     * phase is linear in (seeding updates, per-EM-pass lattice edges).
     * Default 1<<27 ≈ 134M cells ≈ 3–4 driver-minutes / ~4–6 GB
-    * transient heap (measured, `graft.ScaleProbeUnigram`: 100k
-    * words·len8 = 5.5M cells → 16 s/1.6 GB peak; 1M words·len8 =
-    * 58M cells → 94 s/3.2 GB peak — linear). The
+    * transient heap (measured on a synthetic zipf dict, BASELINE.md
+    * "Round-19 unigram-trainer driver cost": 100k words·len8 = 5.5M
+    * cells → 16 s/1.6 GB peak; 1M words·len8 = 58M cells → 94 s/3.2 GB
+    * peak — linear). The
     * [[Dedup.connectedComponents]] driver-cap pattern: a LOUD bound
     * on silent driver work, overridable by a caller who has sized
     * the driver for it.

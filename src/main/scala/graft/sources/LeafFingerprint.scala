@@ -3,16 +3,27 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** The listing guard for driver caches of table state (the survivor
-  * manifest in [[ManifestedSink]], the prior-spent memo in
-  * [[graft.streaming.BudgetGate]]): every leaf file under `dir` as
-  * (path relative to `dir`, mtime, length), skipping `_`- and
-  * `.`-prefixed names (commit markers, checksums, in-flight
-  * `_temporary` output). One fs listing walk, no Spark job. Writers
-  * publish uniquely named part files, so any out-of-band change — a
-  * new or deleted partition, a part file rewritten in place — changes
-  * the set, and a cache compared against it before every use falls
-  * back to reading the table.
+/** The listing guard for driver caches of table state, and the one
+  * cache it guards.
+  *
+  * `apply` lists every leaf file under `dir` as (path relative to
+  * `dir`, mtime, length), skipping `_`- and `.`-prefixed names
+  * (commit markers, checksums, in-flight `_temporary` output). One fs
+  * listing walk, no Spark job. Writers publish uniquely named part
+  * files, so any out-of-band change — a new or deleted partition, a
+  * part file rewritten in place — changes the set, and a cache
+  * compared against it before every use falls back to reading the
+  * table.
+  *
+  * [[cached]]/[[cache]] are that cache: one driver map for every value
+  * derived from a directory's contents (the survivor manifest of
+  * [[ManifestedSink]], the prior-spent memo of
+  * [[graft.streaming.BudgetGate]], the footer schema of a streamed
+  * events file), keyed by (kind, dir). Its total size is capped
+  * JVM-wide at `spark.graft.manifest.cacheMaxBytes` (default 256 MB):
+  * past the cap the least recently used entries go, so a long-lived
+  * JVM that streams into ever-new scratch dirs stays bounded, and a
+  * miss only costs the read the cache saves.
   */
 object LeafFingerprint {
 
@@ -32,4 +43,60 @@ object LeafFingerprint {
         }
     if (!fs.exists(root)) Set.empty else leaves(root, "").toSet
   }
+
+  val CacheMaxBytesKey = "spark.graft.manifest.cacheMaxBytes"
+  private val DefaultCacheMaxBytes = 256L << 20
+
+  private final class Entry(val fingerprint: Set[(String, Long, Long)], val value: Any, val bytes: Long)
+
+  // access-ordered: iteration starts at the least recently used entry
+  private val entries = new java.util.LinkedHashMap[(String, String), Entry](16, 0.75f, true)
+  private var totalBytes = 0L
+
+  private def drop(key: (String, String)): Unit = {
+    val e = entries.remove(key)
+    if (e != null) totalBytes -= e.bytes
+  }
+
+  /** The value cached for (`kind`, `dir`) while `dir`'s fingerprint
+    * still matches the one it was cached under; a stale entry is
+    * dropped. Lists `dir` only when an entry exists.
+    */
+  def cached[V](spark: SparkSession, kind: String, dir: String): Option[V] = {
+    val key = (kind, dir)
+    entries.synchronized(Option(entries.get(key))).flatMap { e =>
+      if (e.fingerprint == apply(spark, dir)) Some(e.value.asInstanceOf[V])
+      else {
+        entries.synchronized(if (entries.get(key) eq e) drop(key))
+        None
+      }
+    }
+  }
+
+  /** Caches `value` (≈ `bytes` on the heap) for (`kind`, `dir`) under
+    * `dir`'s current fingerprint, then evicts least-recently-used
+    * entries until the total is within the cap. A value over the cap
+    * on its own is not kept.
+    */
+  def cache(spark: SparkSession, kind: String, dir: String, value: Any, bytes: Long): Unit = {
+    val key = (kind, dir)
+    val fingerprint = apply(spark, dir)
+    val size = bytes + fingerprint.iterator.map(f => 64L + 2L * f._1.length).sum
+    val cap = spark.conf.getOption(CacheMaxBytesKey).map(_.toLong).getOrElse(DefaultCacheMaxBytes)
+    entries.synchronized {
+      drop(key)
+      if (size <= cap) {
+        entries.put(key, new Entry(fingerprint, value, size))
+        totalBytes += size
+        val lru = entries.values.iterator
+        while (totalBytes > cap) { totalBytes -= lru.next().bytes; lru.remove() }
+      }
+    }
+  }
+
+  /** Bytes held by the cache now. */
+  private[graft] def cachedBytes: Long = entries.synchronized(totalBytes)
+
+  /** Drops every cached value (a fresh JVM's state). */
+  private[graft] def clearCache(): Unit = entries.synchronized { entries.clear(); totalBytes = 0L }
 }

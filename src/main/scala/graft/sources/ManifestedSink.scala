@@ -47,29 +47,18 @@ object ManifestedSink {
   // tick, plus a manifest REWRITE plan that re-read the live parquet —
   // per-tick driver latency the crawl-loop decomposition measured as
   // the suite's biggest unattacked cost (round-19 verdict item 1).
-  // The cache keeps the collected manifest rows between ticks, keyed
-  // by manifest dir. CRASH-SAFE INVALIDATION: every use is guarded by
-  // the live manifest dir's [[LeafFingerprint]] — one fs listing, no
-  // Spark job — and manifest publishes write uniquely-named part
-  // files, so ANY out-of-band rewrite (another process, a
-  // crash-recovered stage promotion, a test poking at the dir) misses
-  // the fingerprint and falls back to the parquet read. The cache is only ever WRITTEN after a successful
-  // publish, from the exact rows just published.
-  private final case class CachedManifest(
-      fingerprint: Set[(String, Long, Long)],
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row],
-      bytes: Long)
-
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedManifest]()
-
-  // Bloom blobs dominate row size (~120 KB/file at default sizing), so
-  // the cache is BYTE-capped, not row-capped: past the cap the entry
-  // is dropped and every tick re-reads from parquet (the pre-round-20
-  // behavior) rather than browning out the driver.
-  private val cacheMaxBytesKey = "spark.graft.manifest.cacheMaxBytes"
-  private val defaultCacheMaxBytes = 256L << 20
+  // The collected manifest rows stay in the [[LeafFingerprint]] cache
+  // between ticks, keyed by manifest dir. CRASH-SAFE INVALIDATION:
+  // every use is guarded by the live manifest dir's fingerprint — one
+  // fs listing, no Spark job — and manifest publishes write
+  // uniquely-named part files, so ANY out-of-band rewrite (another
+  // process, a crash-recovered stage promotion, a test poking at the
+  // dir) misses the fingerprint and falls back to the parquet read.
+  // The cache is only ever WRITTEN after a successful publish, from
+  // the exact rows just published. Bloom blobs dominate row size
+  // (~120 KB/file at default sizing), so entries are sized in bytes
+  // against the cache's global byte cap.
+  private val CacheKind = "ManifestedSink.manifest"
 
   private def rowBytes(r: org.apache.spark.sql.Row): Long = {
     var b = 64L
@@ -84,9 +73,6 @@ object ManifestedSink {
     }
     b
   }
-
-  /** Test/ops hook: drop every cached manifest (a fresh JVM state). */
-  private[graft] def invalidateManifestCache(): Unit = manifestCache.clear()
 
   private def dataFiles(fs: FileSystem, dir: Path): Set[String] =
     if (!fs.exists(dir)) Set.empty
@@ -145,13 +131,9 @@ object ManifestedSink {
     // whose checkpoint commit never landed) is swept before re-apply
     val prior: Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] =
-      Option(manifestCache.get(manifestDir))
-        .filter(_.fingerprint == LeafFingerprint(spark, manifestDir)) match {
-        case Some(c) => Some((c.schema, c.rows))
-        case None =>
-          manifestCache.remove(manifestDir)
-          readManifest(spark, manifestDir).map(m => (m.schema, m.collect().toSeq))
-      }
+      LeafFingerprint.cached[(org.apache.spark.sql.types.StructType,
+          Seq[org.apache.spark.sql.Row])](spark, CacheKind, manifestDir)
+        .orElse(readManifest(spark, manifestDir).map(m => (m.schema, m.collect().toSeq)))
     val survivors = prior.map { case (sch, rows) =>
       val bi = sch.fieldIndex("batch_id")
       // null-batch_id rows drop exactly as the old `=!= batchId`
@@ -206,15 +188,9 @@ object ManifestedSink {
       .coalesce(1).write.mode("overwrite").parquet(stage.toString)
     if (mfs.exists(live)) mfs.delete(live, true)
     mfs.rename(stage, live)
-    // cache the just-published truth for the next tick (byte-capped)
-    val maxBytes = spark.conf.getOption(cacheMaxBytesKey).map(_.toLong)
-      .getOrElse(defaultCacheMaxBytes)
-    val bytes = next._2.iterator.map(rowBytes).sum
-    if (bytes <= maxBytes)
-      manifestCache.put(manifestDir, CachedManifest(
-        LeafFingerprint(spark, manifestDir), next._1, next._2, bytes))
-    else manifestCache.remove(manifestDir)
-    ()
+    // cache the just-published truth for the next tick
+    LeafFingerprint.cache(spark, CacheKind, manifestDir, next,
+      next._2.iterator.map(rowBytes).sum)
   }
 
   /** Snapshot-as-of read: the table as it stood after `maxBatchId`

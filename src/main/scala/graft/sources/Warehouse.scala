@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Warehouse sinks and table lifecycle (SURVEY.md §2 S8–S10).
   *
@@ -289,8 +290,11 @@ object Warehouse {
     } finally { pinned.unpersist(); () }
   }
 
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** A warehouse table read with its declared schema: no parquet
+    * schema inference, so building the frame runs no Spark job.
+    */
+  def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 
   // ---- JDBC parity (SURVEY §1.4; reference S9, DataIngesting.py:48-52) ----
   //

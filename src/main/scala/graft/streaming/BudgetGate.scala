@@ -79,17 +79,8 @@ object BudgetGate {
   /** This fast path's name in the [[DriverResolve]] registry. */
   private[graft] val DriverSite = "BudgetGate"
 
-  // ---- prior-spent memo ----
-  private final case class PriorMemo(
-      nextBatchId: Long,
-      fingerprint: Set[(String, Long, Long)],
-      spent: Map[String, Long])
-
-  private val priorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PriorMemo]()
-
-  /** Test/ops hook: drop every memoized prior (fresh-JVM state). */
-  private[graft] def invalidatePriorCache(): Unit = priorCache.clear()
+  // ---- prior-spent memo: (next batch id, spend through the last batch) ----
+  private val MemoKind = "BudgetGate.prior"
 
   /** Per-group spend over batches strictly before `batchId` — memo
     * hit: zero jobs; miss: the old one-aggregate read. Null groups
@@ -97,21 +88,15 @@ object BudgetGate {
     * is false), so their prior is 0 by join semantics on both paths.
     */
   private def priorSpent(
-      spark: SparkSession, stateDir: String, batchId: Long): Map[String, Long] = {
-    val memo = Option(priorCache.get(stateDir)).filter(m =>
-      m.nextBatchId == batchId &&
-        m.fingerprint == LeafFingerprint(spark, stateDir))
-    memo match {
-      case Some(m) => m.spent
-      case None =>
-        priorCache.remove(stateDir)
+      spark: SparkSession, stateDir: String, batchId: Long): Map[String, Long] =
+    LeafFingerprint.cached[(Long, Map[String, Long])](spark, MemoKind, stateDir)
+      .collect { case (next, spent) if next == batchId => spent }
+      .getOrElse(
         readState(spark, stateDir)
           .filter(col("batch_id") < batchId && col("grp").isNotNull)
           .groupBy("grp").agg(sum(col("spent_delta")).as("__prior"))
           .collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-  }
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
 
   private def memoize(
       spark: SparkSession, stateDir: String, batchId: Long,
@@ -120,9 +105,8 @@ object BudgetGate {
       if (g == null) acc
       else acc.updated(g, Math.addExact(acc.getOrElse(g, 0L), d))
     }
-    priorCache.put(stateDir,
-      PriorMemo(batchId + 1, LeafFingerprint(spark, stateDir), merged))
-    ()
+    LeafFingerprint.cache(spark, MemoKind, stateDir, (batchId + 1, merged),
+      merged.keysIterator.map(g => 64L + 2L * g.length).sum)
   }
 
   def readState(spark: SparkSession, stateDir: String): DataFrame =

@@ -23,4 +23,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Waits until every posted listener event is delivered
+    * (`listenerBus` is `private[spark]`): listeners hear job and
+    * streaming-progress events asynchronously, so a reader of what one
+    * heard drains the bus first.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.SparkInternals
+import org.apache.spark.sql.graftshim.{Bridge, SparkInternals}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.fuel.{FuelCleaning, FuelDashboard, FuelQueries}
@@ -118,7 +118,7 @@ class FuelRenderSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     session.listenerManager.register(listener)
     try {
       FuelDashboard.render(p, s, generatedAt = "test")
-      SparkInternals.drainListenerBus(spark.sparkContext)
+      Bridge.drainListenerBus(spark.sparkContext)
     } finally session.listenerManager.unregister(listener)
     assert(failures.isEmpty, failures)
     assert(plans.size === 3, "render must issue exactly three actions")
@@ -150,7 +150,7 @@ class FuelRenderSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     sc.setJobGroup("render-contract-group", "render contract", interruptOnCancel = false)
     try {
       FuelDashboard.render(p, s, generatedAt = "test")
-      SparkInternals.drainListenerBus(sc)
+      Bridge.drainListenerBus(sc)
     } finally {
       sc.clearJobGroup()
       sc.setLocalProperty("graft.spec.caller", null)

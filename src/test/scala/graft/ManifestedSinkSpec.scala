@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Manifest, ManifestedSink}
+import graft.sources.{LeafFingerprint, Manifest, ManifestedSink}
 
 /** Transactional manifest sink: data-dir ↔ manifest coherence after
   * every batch, idempotent replay, orphan cleanup, crash-staged
@@ -150,10 +150,10 @@ class ManifestedSinkSpec extends SparkSpecBase {
       .as[(String, Long, Long, Long, Long)].collect().toSet
     // same sequence with the cache wiped before every append
     val dir2 = tmp("msink_data2"); val mdir2 = tmp("msink_meta2")
-    ManifestedSink.invalidateManifestCache()
+    LeafFingerprint.clearCache()
     ManifestedSink.appendBatch(batchDf(0, 32).repartition(2, col("k")),
       dir2, mdir2, Seq("k"), Seq("k"), 0L)
-    ManifestedSink.invalidateManifestCache()
+    LeafFingerprint.clearCache()
     ManifestedSink.appendBatch(batchDf(32, 64).repartition(2, col("k")),
       dir2, mdir2, Seq("k"), Seq("k"), 1L)
     val viaDisk = ManifestedSink.readManifest(spark, mdir2).get
@@ -166,6 +166,42 @@ class ManifestedSinkSpec extends SparkSpecBase {
     assert(viaCache.size === viaDisk.size)
     assert(stripDir(viaCache).map(t => (t._2, t._3, t._4, t._5))
       === stripDir(viaDisk).map(t => (t._2, t._3, t._4, t._5)))
+  }
+
+  test("the driver cache keeps two sinks' manifests within one global byte cap") {
+    val key = LeafFingerprint.CacheMaxBytesKey
+    val prev = spark.conf.getOption(key)
+    def sink(): (String, String) = (tmp("msink_data"), tmp("msink_meta"))
+    def append(s: (String, String), b: Long): Unit =
+      ManifestedSink.appendBatch(batchDf(b * 32, b * 32 + 32).repartition(2, col("k")),
+        s._1, s._2, Seq("k"), Seq("k"), b)
+    try {
+      LeafFingerprint.clearCache()
+      append(sink(), 0L)
+      val one = LeafFingerprint.cachedBytes
+      assert(one > 0L, "a published manifest is cached")
+      // each manifest fits the cap; the two together do not
+      val cap = one + one / 2
+      spark.conf.set(key, cap.toString)
+      LeafFingerprint.clearCache()
+      val (a, b) = (sink(), sink())
+      append(a, 0L)
+      append(b, 0L)
+      assert(LeafFingerprint.cachedBytes <= cap)
+      assert(LeafFingerprint.cachedBytes > 0L, "the latest manifest stays cached")
+      // the evicted sink falls back to its parquet manifest
+      append(a, 1L)
+      assert(LeafFingerprint.cachedBytes <= cap)
+      assert(ManifestedSink.readManifest(spark, a._2).get
+        .agg(sum("n_rows")).head.getLong(0) === 64L)
+      assert(spark.read.parquet(a._1).count() === 64L)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      LeafFingerprint.clearCache()
+    }
   }
 
   test("real writeStream drive: the sink body commits per micro-batch") {
