@@ -3,9 +3,13 @@ package graft.fuel
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Warehouse
 import graft.streaming.StreamOps
@@ -14,11 +18,15 @@ import graft.streaming.StreamOps
   * one Structured Streaming program:
   *
   * {{{
-  * JSONL source dir (stand-in for the MQTT raw topics — transport,
-  *   not semantics)
+  * JSONL landing dir (stand-in for the MQTT raw topics — transport,
+  *   not semantics), one reader each: ingest_prices / ingest_stations
   *   → cleaning with dead-letter split        (P2–P8)
-  *   → parquet warehouse, batched appends     (S8–S10)
-  *   → live views: Q-bar (complete mode) + latest-per-group
+  *   → parquet warehouse, one file per micro-batch, committed on
+  *     arrival; the landing files of a committed batch are deleted
+  *                                            (S8–S10)
+  *   → live views tail the committed warehouse on the 1 s dashboard
+  *     interval: fuel_qbar_live (Q-bar, complete mode) and qmap_live
+  *     (swaps in fuel_qmap_live, republishes the dashboard)
   * }}}
   *
   * Usage: `runMain graft.fuel.FuelPipeline <pricesDir> <stationsDir>
@@ -26,7 +34,8 @@ import graft.streaming.StreamOps
   * processes each file exactly once (file-source offsets +
   * checkpoints under `<warehouseDir>/_checkpoints` = the reference's
   * high-water-mark St1, done by the engine, durable across
-  * restarts), stops when idle.
+  * restarts) and deletes it once its rows are in the warehouse (the
+  * source dirs are topics, consumed as read), stops when idle.
   */
 object FuelPipeline {
 
@@ -41,26 +50,18 @@ object FuelPipeline {
     dashServer.foreach(s => println(s"[pipeline] dashboard live at ${s.address}/"))
     val spark = graft.GraftSession.get()
     val qs = start(spark, pricesDir, stationsDir, warehouseDir, dashboardPath)
+    // In start's order: the ingests drain first, so the live views'
+    // last ticks run after the final commit and show every row.
     qs.foreach(_.processAllAvailable())
     qs.foreach(_.stop())
     val stored = spark.read.parquet(s"$warehouseDir/prices")
     println(s"[pipeline] warehouse prices rows=${stored.count()}")
     println(s"[pipeline] live qbar:")
     spark.table("fuel_qbar_live").orderBy("fueltype").show(20, truncate = false)
-    // One-shot runs may finish before the 1 s live-map trigger fires
-    // with the warehouse in place; report the standing query straight
-    // off the warehouse (what the live view converges to).
-    val storedStations = spark.read.parquet(s"$warehouseDir/stations")
-    val qmap = FuelQueries.qMap(storedStations, stored)
-    println(s"[pipeline] qmap rows=${qmap.count()}")
-    // One-shot runs can drain before the live-map tick sees a
-    // populated warehouse; publish the converged dashboard here (the
-    // same render the per-tick republish produces once data exists).
-    dashboardPath.foreach { p =>
-      FuelDashboard.writeAtomic(p, FuelDashboard.render(
-        stored, storedStations,
-        generatedAt = java.time.Instant.now().toString))
-      println(s"[pipeline] dashboard -> $p")
+    // A qmap_live tick swapped the view in and published the dashboard.
+    if (spark.catalog.tableExists("fuel_qmap_live")) {
+      println(s"[pipeline] qmap rows=${spark.table("fuel_qmap_live").count()}")
+      dashboardPath.foreach(p => println(s"[pipeline] dashboard -> $p"))
     }
     dashServer.foreach(_.close())
     spark.stop()
@@ -114,8 +115,8 @@ object FuelPipeline {
   def startRouted(
       spark: SparkSession,
       mixedDir: String,
-      warehouseDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream
+      warehouseDir: String): StreamingQuery = {
+    landing(spark)
       .text(mixedDir)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -124,11 +125,12 @@ object FuelPipeline {
         Warehouse.routedSink(
           s"$warehouseDir/stations", s"$warehouseDir/prices",
           deadPath = Some(s"$warehouseDir/dead_letters"))(
-          Warehouse.withSurrogateId(split.valid), batchId)
+          Warehouse.withSurrogateId(split.valid, batchId), batchId)
         // parseWire keeps the unparseable original in _corrupt
         Warehouse.append(
           split.rejected.select(col("_corrupt").as("raw"), col("_reject_reason")),
           s"$warehouseDir/dead_letters_raw")
+        consume(batch)
       }
       .queryName("ingest_routed")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_routed")
@@ -150,36 +152,82 @@ object FuelPipeline {
     else None
   }
 
-  /** Wire and start the three streaming queries; returns them running. */
+  /** At most this many landing files (one MQTT message each) per
+    * ingest micro-batch: [[Warehouse.withSurrogateId]] writes a batch
+    * as one task and one file, so a backlog after downtime drains as a
+    * run of bounded batches rather than one unbounded write.
+    */
+  private val LandingFilesPerBatch = 2000
+
+  /** A landing directory as read by its one reader, in bounded batches. */
+  private def landing(spark: SparkSession): DataStreamReader =
+    spark.readStream.option("maxFilesPerTrigger", LandingFilesPerBatch.toLong)
+
+  /** Delete a micro-batch's landing files once its rows are in the
+    * warehouse, so an on-arrival poll lists only the backlog. Done
+    * here rather than by the source's `cleanSource`: Spark cleans a
+    * batch's files only when the NEXT batch starts, so after a burst
+    * the last batch's files (up to [[LandingFilesPerBatch]]) stayed
+    * and were listed 100 times a second. A batch replayed after a
+    * crash between this delete and Spark's commit finds its files
+    * gone and appends nothing (a missing root path lists as empty).
+    */
+  private def consume(batch: DataFrame): Unit = {
+    val files = batchFiles(batch)
+    if (files.nonEmpty) {
+      val fs = files.head.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+      files.foreach(fs.delete(_, false))
+    }
+  }
+
+  /** The files a file-source micro-batch reads, found without a job:
+    * `foreachBatch` hands the batch over as a `LogicalRDD` over its
+    * physical RDD, whose lineage holds the `FileScanRDD`. An empty
+    * file has no scan split, so it is not listed.
+    */
+  private def batchFiles(batch: DataFrame): Seq[Path] = {
+    def scans(rdd: RDD[_]): Seq[FileScanRDD] = rdd match {
+      case f: FileScanRDD => Seq(f)
+      case r => r.dependencies.flatMap(d => scans(d.rdd))
+    }
+    batch.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+      .flatMap(scans)
+      .flatMap(_.filePartitions.flatMap(_.files.map(_.toPath)))
+      .distinct
+  }
+
+  /** Wire and start the four streaming queries; returns them running. */
   def start(
       spark: SparkSession,
       pricesDir: String,
       stationsDir: String,
       warehouseDir: String,
-      dashboardPath: Option[String] = None): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+      dashboardPath: Option[String] = None): Seq[StreamingQuery] = {
 
-    val rawPrices = spark.readStream
-      .schema(FuelModel.rawPriceSchema)
-      .json(pricesDir)
-    val rawStations = spark.readStream
-      .schema(FuelModel.rawStationSchema)
-      .json(stationsDir)
+    val prices = FuelCleaning.cleanPrices(
+      landing(spark).schema(FuelModel.rawPriceSchema).json(pricesDir))
+    val stations = FuelCleaning.cleanStations(
+      landing(spark).schema(FuelModel.rawStationSchema).json(stationsDir))
 
-    val prices = FuelCleaning.cleanPrices(rawPrices)
-    val stations = FuelCleaning.cleanStations(rawStations)
+    val (pricesTable, stationsTable) = (s"$warehouseDir/prices", s"$warehouseDir/stations")
+    // The live views tail both tables, and a file stream source needs
+    // its directory to exist when it starts.
+    val fs = new Path(warehouseDir).getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(pricesTable, stationsTable).foreach(t => fs.mkdirs(new Path(t)))
 
-    // Warehouse ingest: batched appends per micro-batch (the
-    // reference does one row/connection/commit per message —
-    // SURVEY §6; foreachBatch restores sane write granularity).
-    // Dead letters land next to the tables, with reasons.
+    // Warehouse ingest: one append per micro-batch (the reference does
+    // one row/connection/commit per message — SURVEY §6), run as soon
+    // as messages land rather than on the dashboard's 1 s interval, so
+    // a commit is not held back to the next second. Each landing
+    // message is parsed and cleaned here and nowhere else.
     val ingestPrices = prices.valid.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Warehouse.append(Warehouse.withSurrogateId(batch), s"$warehouseDir/prices")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Warehouse.append(Warehouse.withSurrogateId(batch, batchId), pricesTable)
+        consume(batch)
       }
       .queryName("ingest_prices")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_prices")
-      .trigger(Trigger.ProcessingTime(1000L))
       .start()
 
     val ingestStations = stations.valid
@@ -187,27 +235,38 @@ object FuelPipeline {
       .dropDuplicates("code")
       .writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Warehouse.append(Warehouse.withSurrogateId(batch), s"$warehouseDir/stations")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // sorted so a replayed batch numbers its rows the same way
+        Warehouse.append(
+          Warehouse.withSurrogateId(batch.sortWithinPartitions("code"), batchId), stationsTable)
+        consume(batch)
       }
       .queryName("ingest_stations")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_stations")
-      .trigger(Trigger.ProcessingTime(1000L))
       .start()
 
-    // Dashboard live view: the standing Q-bar aggregation (the batch
-    // query over the stream), complete mode, 1 s trigger (St5) —
-    // incremental, not recompute-per-tick; a running mean over all
-    // messages ever received, without unbounded driver memory.
+    // The committed warehouse as a stream: a new file is a committed
+    // ingest batch. Nothing here deletes: the tables are the
+    // warehouse, not a landing topic.
+    def committed(table: String, schema: StructType) =
+      spark.readStream.schema(schema).parquet(table)
+    val committedPrices = committed(pricesTable, FuelModel.warehousePricesSchema)
+
+    // Dashboard live view: the standing Q-bar aggregation over the
+    // committed prices, complete mode, on the dashboard's 1 s interval
+    // (St5) — incremental, not recompute-per-tick; a running mean over
+    // all rows ever committed, without unbounded driver memory.
     val live = StreamOps.liveView(
-      FuelQueries.qBar(prices.valid), "fuel_qbar_live", 1000L)
+      FuelQueries.qBar(committedPrices), "fuel_qbar_live", 1000L)
 
     // Live Q-map: the flagship join needs the *current* station
-    // dimension per tick, so it runs as a per-micro-batch batch query
-    // (stream→foreachBatch→FuelQueries.qMap against the warehouse
-    // dimension) — the streaming twin of the dashboard's 1 s
-    // recompute, but incremental on the stream side.
-    val liveMap = prices.valid.writeStream
+    // dimension, so each tick runs it as a batch query over both
+    // tables. The stream only says when: it tails both tables, so
+    // the 1 s tick runs exactly when the warehouse has changed,
+    // including after the final commit.
+    val liveMap = committedPrices.select(col("id"))
+      .union(committed(stationsTable, FuelModel.warehouseStationsSchema).select(col("id")))
+      .writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (_: DataFrame, _: Long) =>
         readWarehouse(spark, warehouseDir).foreach { case (pricesNow, stationsNow) =>

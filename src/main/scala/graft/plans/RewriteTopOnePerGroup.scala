@@ -16,7 +16,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * aggregate form ships one pre-aggregated row per (mapper, group) —
   * at 100 TB that is the difference between shuffling the stream and
   * shuffling the groups (see `Relational.latestPerGroup`, the
-  * hand-written version of the same plan).
+  * hand-written version of the same plan). The aggregation is a
+  * `SortAggregate`, not a hash one: the struct buffer of `max_by`
+  * has no hash-mutable form, so a `Sort` runs on each side of the
+  * exchange (after it, over the pre-aggregated rows only).
   *
   * Fires only when the rewrite is provably equivalent:
   *  - the filter is exactly `rn = 1` (or `1 = rn` / `rn <= 1`) on the

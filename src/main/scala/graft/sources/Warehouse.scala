@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.StructType
   * The reference's warehouse is SQLite with per-message single-row
   * inserts (`DataIngesting.py:48-64`); the engine's is partitioned
   * parquet with batched appends — same contents, scale-sane writes.
-  * Surrogate `id` uses `monotonically_increasing_id()`: unique and
-  * ascending per partition but NOT densely sequential — the
+  * A streaming append's surrogate `id` ([[Warehouse.withSurrogateId]])
+  * is unique across appends but NOT densely sequential — the
   * documented semantic difference from SQLite AUTOINCREMENT.
   */
 object Warehouse {
@@ -66,9 +66,21 @@ object Warehouse {
       .saveAsTable(table)
   }
 
-  /** Attach the surrogate id column (documented non-dense). */
-  def withSurrogateId(df: DataFrame): DataFrame =
-    df.withColumn("id", monotonically_increasing_id())
+  /** Attach the surrogate id column to micro-batch `batchId` of a
+    * streaming append. The batch becomes ONE partition — one task and
+    * one file per append, so callers bound their batches — and its
+    * row `r` gets id `batchId · 2^33 + r`. Each batch owns its own id
+    * range, so ids are unique across appends (a bare
+    * `monotonically_increasing_id` restarts at 0 in every batch), and
+    * a replayed batch gets the same ids as long as its rows come in
+    * the same order. Not dense — the documented difference from
+    * SQLite AUTOINCREMENT that [[withDenseId]] closes, at the price
+    * of a shuffle.
+    */
+  def withSurrogateId(df: DataFrame, batchId: Long): DataFrame = {
+    require(batchId >= 0 && batchId < (1L << 30), s"withSurrogateId: batch id $batchId out of range")
+    df.coalesce(1).withColumn("id", lit(batchId << 33) + monotonically_increasing_id())
+  }
 
   /** DENSE surrogate ids `startAt .. startAt+N-1` under a declared
     * order — true SQLite/`AUTOINCREMENT` parity
