@@ -1,5 +1,7 @@
 package graft.fuel
 
+import java.io.FileNotFoundException
+
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
@@ -22,8 +24,8 @@ import graft.streaming.StreamOps
   *   not semantics), one reader each: ingest_prices / ingest_stations
   *   → cleaning with dead-letter split        (P2–P8)
   *   → parquet warehouse, one file per micro-batch, committed on
-  *     arrival; the landing files of a committed batch are deleted
-  *                                            (S8–S10)
+  *     arrival; the landing files of a committed batch are moved
+  *     out of the source's sight, into `_committed/` (S8–S10)
   *   → live views tail the committed warehouse on the 1 s dashboard
   *     interval: fuel_qbar_live (Q-bar, complete mode) and qmap_live
   *     (swaps in fuel_qmap_live, republishes the dashboard)
@@ -34,8 +36,9 @@ import graft.streaming.StreamOps
   * processes each file exactly once (file-source offsets +
   * checkpoints under `<warehouseDir>/_checkpoints` = the reference's
   * high-water-mark St1, done by the engine, durable across
-  * restarts) and deletes it once its rows are in the warehouse (the
-  * source dirs are topics, consumed as read), stops when idle.
+  * restarts) and moves it into the dir's `_committed/` once its rows
+  * are in the warehouse (the source dirs are topics, consumed as
+  * read), stops when idle.
   */
 object FuelPipeline {
 
@@ -163,20 +166,44 @@ object FuelPipeline {
   private def landing(spark: SparkSession): DataStreamReader =
     spark.readStream.option("maxFilesPerTrigger", LandingFilesPerBatch.toLong)
 
-  /** Delete a micro-batch's landing files once its rows are in the
-    * warehouse, so an on-arrival poll lists only the backlog. Done
-    * here rather than by the source's `cleanSource`: Spark cleans a
-    * batch's files only when the NEXT batch starts, so after a burst
-    * the last batch's files (up to [[LandingFilesPerBatch]]) stayed
-    * and were listed 100 times a second. A batch replayed after a
-    * crash between this delete and Spark's commit finds its files
-    * gone and appends nothing (a missing root path lists as empty).
+  /** Subdirectory of a landing directory that holds its committed
+    * files. The leading `_` hides it from the file source's listing.
+    */
+  val Committed = "_committed"
+
+  /** Move a micro-batch's landing files into the landing directory's
+    * [[Committed]] subdirectory once their rows are in the warehouse,
+    * so an on-arrival poll lists only the backlog. Done here rather
+    * than by the source's `cleanSource`: Spark cleans a batch's files
+    * only when the NEXT batch starts, so after a burst the last
+    * batch's files (up to [[LandingFilesPerBatch]]) stayed and were
+    * listed 100 times a second.
+    *
+    * Moved, not deleted: a rename frees no disk block. On a file
+    * system mounted with online discard, every deleted one-block
+    * message costs a TRIM. On a 4-vCPU VM (ext4, `discard`), deleting
+    * the messages of a 16 s run at 25 messages/s left the disk slow
+    * for tens of seconds after the pipeline stopped: the next
+    * program's 500 file creates and renames took 68–181 ms, against
+    * 20–29 ms after a run that moved them. Retention of the committed
+    * files is left to the operator, as for a topic.
+    *
+    * A batch replayed after a crash between this move and Spark's
+    * commit finds its files gone and appends nothing (a missing root
+    * path lists as empty).
     */
   private def consume(batch: DataFrame): Unit = {
     val files = batchFiles(batch)
     if (files.nonEmpty) {
       val fs = files.head.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      files.foreach(fs.delete(_, false))
+      files.groupBy(_.getParent).foreach { case (dir, inDir) =>
+        val committed = new Path(dir, Committed)
+        fs.mkdirs(committed)
+        inDir.foreach { f =>
+          try fs.rename(f, new Path(committed, f.getName))
+          catch { case _: FileNotFoundException => } // moved by an earlier attempt
+        }
+      }
     }
   }
 

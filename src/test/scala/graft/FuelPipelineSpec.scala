@@ -14,9 +14,10 @@ import graft.fuel.{FuelCleaning, FuelModel, FuelPipeline, FuelQueries}
 import graft.sources.Warehouse
 
 /** `FuelPipeline.start` on the golden corpus: the live views equal the
-  * batch queries over the warehouse, the ingests empty their landing
-  * dirs and number rows uniquely across micro-batches, and the
-  * warehouse read `qmap_live` repeats every tick.
+  * batch queries over the warehouse, the ingests move what they
+  * committed out of their landing dirs and number rows uniquely
+  * across micro-batches, and the warehouse read `qmap_live` repeats
+  * every tick.
   */
 class FuelPipelineSpec extends SparkSpecBase {
 
@@ -74,11 +75,14 @@ class FuelPipelineSpec extends SparkSpecBase {
     val beforeLast = prices.join(lastWaveSeqs, Seq("seq"), "left_anti")
     assert(qmap !== multiset(FuelQueries.qMap(stations, beforeLast).collect().toSeq))
 
-    // each ingest is its landing's one reader and deletes what it committed
+    // each ingest is its landing's one reader and moves what it
+    // committed out of the source's sight
     landings.foreach(d => assert(landingFiles(d).isEmpty, s"left in $d: ${landingFiles(d)}"))
+    assert(landingFiles(landings.head.resolve(FuelPipeline.Committed)) ===
+      Set("wave-0.jsonl", "wave-1.jsonl", "wave-2.jsonl"))
   }
 
-  test("a batch replayed after its landing files were deleted appends nothing") {
+  test("a batch replayed after its landing files were moved out appends nothing") {
     val root = Files.createTempDirectory("graft_fuel_replay")
     val (pricesIn, stationsIn, wh) =
       (root.resolve("prices"), root.resolve("stations"), root.resolve("wh").toString)
