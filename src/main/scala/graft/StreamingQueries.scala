@@ -46,33 +46,13 @@ object StreamingQueries {
     * ts normalization (nanos-as-long or µs timestamp) as
     * [[Tables.events]].
     */
-  // The footer-derived schema is cacheable — one fewer footer-read
-  // job per streaming query — but NOT per dir alone: events.ts has
-  // shipped as both TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS)
-  // across testdata generations, so a regenerated-in-place dir in a
-  // long-lived session would silently keep the WRONG by-schema ts
-  // normalization. The [[graft.sources.LeafFingerprint]] cache keys it
-  // on the file's (name, mtime, size), so a rewrite misses (round-13
-  // ADVICE).
+  // The footer schema comes from the [[Tables.schema]] cache, so a
+  // streaming query reads no footer in a job of its own.
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.LeafFingerprint
-    val f = s"$d/events.parquet"
-    val schema = LeafFingerprint
-      .cached[org.apache.spark.sql.types.StructType](s, "events.schema", f)
-      .getOrElse {
-        val read = s.read.parquet(f).schema
-        LeafFingerprint.cache(s, "events.schema", f, read, 2L * read.json.length)
-        read
-      }
+    val schema = Tables.schema(s, s"$d/events.parquet")
     // Glob form: the file-stream source requires a directory basePath;
     // the corpus table is a single file, so glob it under its parent.
-    val raw = s.readStream.schema(schema).parquet(s"$d/*events.parquet")
-    val ts = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case _ => col("ts")
-    }
-    raw.withColumn("ts", ts.cast("timestamp_ntz"))
+    Tables.withNtzTs(s.readStream.schema(schema).parquet(s"$d/*events.parquet"))
   }
 
   private val snapN = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -38,7 +38,7 @@ import graft.streaming.StreamOps
   * high-water-mark St1, done by the engine, durable across
   * restarts) and moves it into the dir's `_committed/` once its rows
   * are in the warehouse (the source dirs are topics, consumed as
-  * read), stops when idle.
+  * read; committed files go after an hour), stops when idle.
   */
 object FuelPipeline {
 
@@ -185,8 +185,9 @@ object FuelPipeline {
     * the messages of a 16 s run at 25 messages/s left the disk slow
     * for tens of seconds after the pipeline stopped: the next
     * program's 500 file creates and renames took 68–181 ms, against
-    * 20–29 ms after a run that moved them. Retention of the committed
-    * files is left to the operator, as for a topic.
+    * 20–29 ms after a run that moved them. Committed files are kept
+    * for [[CommittedRetentionMs]], then deleted in bulk off the ingest
+    * path (see [[sweepDue]]).
     *
     * A batch replayed after a crash between this move and Spark's
     * commit finds its files gone and appends nothing (a missing root
@@ -203,8 +204,47 @@ object FuelPipeline {
           try fs.rename(f, new Path(committed, f.getName))
           catch { case _: FileNotFoundException => } // moved by an earlier attempt
         }
+        if (sweepDue(committed, System.currentTimeMillis())) sweep(fs, committed)
       }
     }
+  }
+
+  /** How long a committed landing file is kept, and the least time
+    * between two sweeps of one [[Committed]] directory. The reference
+    * fetches one API snapshot an hour, so a sweep deletes about one
+    * snapshot's messages at once, never one delete per message.
+    */
+  private[graft] val CommittedRetentionMs = 60L * 60 * 1000
+
+  // committed dir -> wall-clock ms of its last sweep in this JVM
+  private val lastSweepMs = scala.collection.mutable.Map.empty[Path, Long]
+
+  /** Whether `committed` is due a sweep at `nowMs`, recording one if
+    * so: at its first commit in this JVM (files left from before a
+    * restart go then), and [[CommittedRetentionMs]] after its last.
+    * All the ingest path does for retention: it never lists the
+    * directory, and it starts a thread only when this says so.
+    */
+  private[graft] def sweepDue(committed: Path, nowMs: Long): Boolean = lastSweepMs.synchronized {
+    val due = lastSweepMs.get(committed).forall(nowMs - _ >= CommittedRetentionMs)
+    if (due) lastSweepMs(committed) = nowMs
+    due
+  }
+
+  /** Deletes the files in `committed` that landed more than
+    * [[CommittedRetentionMs]] ago (a move keeps a landing file's
+    * mtime), on a thread started for the sweep.
+    */
+  private def sweep(fs: FileSystem, committed: Path): Unit = {
+    val cutoffMs = System.currentTimeMillis() - CommittedRetentionMs
+    val t = new Thread(() =>
+      try fs.listStatus(committed).foreach { st =>
+        if (st.isFile && st.getModificationTime < cutoffMs) fs.delete(st.getPath, false)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[pipeline] sweep of $committed failed: ${e.getMessage}")
+      }, "graft-committed-sweep")
+    t.setDaemon(true)
+    t.start()
   }
 
   /** The files a file-source micro-batch reads, found without a job:

@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   * [[cached]]/[[cache]] are that cache: one driver map for every value
   * derived from a directory's contents (the survivor manifest of
   * [[ManifestedSink]], the prior-spent memo of
-  * [[graft.streaming.BudgetGate]], the footer schema of a streamed
-  * events file), keyed by (kind, dir). Its total size is capped
+  * [[graft.streaming.BudgetGate]], the footer schema of a catalog
+  * table), keyed by (kind, dir). Its total size is capped
   * JVM-wide at `spark.graft.manifest.cacheMaxBytes` (default 256 MB):
   * past the cap the least recently used entries go, so a long-lived
   * JVM that streams into ever-new scratch dirs stays bounded, and a

@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -16,8 +19,9 @@ import graft.sources.Warehouse
 /** `FuelPipeline.start` on the golden corpus: the live views equal the
   * batch queries over the warehouse, the ingests move what they
   * committed out of their landing dirs and number rows uniquely
-  * across micro-batches, and the warehouse read `qmap_live` repeats
-  * every tick.
+  * across micro-batches, list a burst of landing files without a
+  * Spark job, keep committed files for an hour, and the warehouse read
+  * `qmap_live` repeats every tick.
   */
 class FuelPipelineSpec extends SparkSpecBase {
 
@@ -163,5 +167,86 @@ class FuelPipelineSpec extends SparkSpecBase {
       assert(wantRows.nonEmpty)
       assert(multiset(got.collect().toSeq) === multiset(wantRows))
     }
+  }
+
+  /** Landing and warehouse dirs under a fresh temp dir, the landing
+    * dirs created. */
+  private def pipelineDirs(prefix: String): (Path, Path, String) = {
+    val root = Files.createTempDirectory(prefix)
+    val (pricesIn, stationsIn) = (root.resolve("prices"), root.resolve("stations"))
+    Files.createDirectories(pricesIn)
+    Files.createDirectories(stationsIn)
+    (pricesIn, stationsIn, root.resolve("wh").toString)
+  }
+
+  test("a burst of landing files, one message each, is listed on the driver and each station lands once") {
+    val (pricesIn, stationsIn, wh) = pipelineDirs("graft_fuel_burst")
+    val lines = Files.readAllLines(Paths.get(resource("/fuel/stations.jsonl"))).asScala.toSeq
+    // more files than Spark's parallel-listing threshold (32), and
+    // some messages twice, as a re-published snapshot would land them
+    val messages = lines.take(64) ++ lines.take(8)
+    messages.zipWithIndex.foreach { case (m, k) =>
+      Files.write(stationsIn.resolve(f"msg-$k%03d.jsonl"), Seq(m).asJava)
+    }
+
+    val sc = spark.sparkContext
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => descriptions.add(d))
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val qs = FuelPipeline.start(spark, pricesIn.toString, stationsIn.toString, wh)
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    val listings = descriptions.asScala.filter(_.startsWith("Listing leaf files and directories"))
+    assert(listings.isEmpty, "a listing job ran")
+
+    val codes = spark.read.parquet(s"$wh/stations").select("code").collect().map(_.get(0)).toSeq
+    import spark.implicits._
+    val landed = FuelCleaning.cleanStations(
+      spark.read.schema(FuelModel.rawStationSchema).json(messages.toDS())).valid
+      .select("code").collect().map(_.get(0)).toSet
+    assert(landed.size > 32)
+    assert(codes.size === codes.distinct.size, "a station landed twice")
+    assert(codes.toSet === landed)
+    assert(landingFiles(stationsIn).isEmpty)
+  }
+
+  test("committed landing files older than the retention age are swept on the ingest's own thread, the rest stay") {
+    val (pricesIn, stationsIn, wh) = pipelineDirs("graft_fuel_retention")
+    val committed = Files.createDirectories(pricesIn.resolve(FuelPipeline.Committed))
+    val now = System.currentTimeMillis()
+    val ages = Map( // minutes
+      "old-0.jsonl" -> 24 * 60, "old-1.jsonl" -> 61, "kept-0.jsonl" -> 59, "kept-1.jsonl" -> 1)
+    ages.foreach { case (name, minutes) =>
+      val f = Files.write(committed.resolve(name), Seq("{}").asJava)
+      Files.setLastModifiedTime(f, FileTime.fromMillis(now - minutes * 60000L))
+    }
+    Files.copy(Paths.get(resource("/fuel/prices.jsonl")), pricesIn.resolve("prices.jsonl"))
+    val qs = FuelPipeline.start(spark, pricesIn.toString, stationsIn.toString, wh)
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+
+    val want = Set("kept-0.jsonl", "kept-1.jsonl", "prices.jsonl")
+    def left = Files.list(committed).iterator().asScala.map(_.getFileName.toString).toSet
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (left != want && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(left === want)
+  }
+
+  test("a committed dir is swept at its first commit, then at most once per retention age") {
+    val (a, b) = (new HPath("file:/sweep-gate/a/_committed"), new HPath("file:/sweep-gate/b/_committed"))
+    val t0 = 1000000L
+    val age = FuelPipeline.CommittedRetentionMs
+    assert(FuelPipeline.sweepDue(a, t0))
+    assert(!FuelPipeline.sweepDue(a, t0 + 1))
+    assert(!FuelPipeline.sweepDue(a, t0 + age - 1))
+    assert(FuelPipeline.sweepDue(b, t0 + 1), "each landing dir has its own clock")
+    assert(FuelPipeline.sweepDue(a, t0 + age))
+    assert(!FuelPipeline.sweepDue(a, t0 + age + 1))
   }
 }
