@@ -17,6 +17,10 @@ import org.apache.spark.sql.SparkSession
   *  - file listing stays on the driver: a read or a file-stream batch
   *    over many paths lists them with `stat`s, never with a Spark job
   *    of one task per path.
+  *  - local file modes set in-process: `file:` is
+  *    [[graft.sources.InProcessLocalFileSystem]], so a local `create`
+  *    or `mkdirs` (checkpoint entries, state deltas, parquet appends)
+  *    never forks `chmod`.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
@@ -37,7 +41,12 @@ object GraftSession {
       // ~25-30 ms of per-op setup that the FileSystem path doesn't —
       // measured 33→8 ms walCommit / 38→8 ms commitOffsets /
       // 34→12 ms source latestOffset per micro-batch (round 13), i.e.
-      // ~0.1 s per trigger cycle of pure harness. A deployment whose
+      // ~0.1 s per trigger cycle of pure harness. Part of what was
+      // left was a forked `chmod` (5.5-7.4 ms each) for every entry
+      // and for its `.crc`; `fs.file.impl` below sets modes in-process,
+      // and only a FileSystem-based manager sees it: FileContext's
+      // `LocalFs` builds its own `LocalFileSystem` and never reads
+      // `fs.file.impl`, so it would keep forking. A deployment whose
       // checkpoints live on an object store or HDFS should NOT
       // inherit this: rename-overwrite semantics differ there, which
       // is exactly why Spark defaults to FileContext.
@@ -59,6 +68,14 @@ object GraftSession {
       // over the executors, which is why Spark defaults to it.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      // Local file modes in-process, not by a forked `chmod` per local
+      // `create` and `mkdirs` (see the class): an untraced
+      // `live_trickle` JVM started 1,853 processes, 1,843 of them
+      // `chmod`, and 5 with this. FileSystem instances are cached per
+      // scheme and user, not per conf, so this holds only if nothing
+      // in the JVM fetched a `file:` FileSystem before the session.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.InProcessLocalFileSystem].getName)
 
   // Default to the REAL core count: the old fallback of 4 silently
   // undersized any run that forgot SPARK_GRAFT_CPUS — the exact trap
