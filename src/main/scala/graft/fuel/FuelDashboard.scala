@@ -1,13 +1,23 @@
 package graft.fuel
 
+import java.math.MathContext
+import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 import graft.operators.DriverResolve
+import graft.sources.LeafFingerprint
+import graft.streaming.StreamOps
 
 /** Static-HTML twin of the reference's Dash dashboard
   * (`DataAnalysis.py:59-165`): the three standing queries — average
@@ -20,14 +30,16 @@ import graft.operators.DriverResolve
   * equivalent of the reference's per-interval Dash callback refresh.
   *
   * Scale note: everything collected here is presentation-bounded —
-  * ≤|fuel types| bar rows, ≤|fuel types|×|days| line points and
-  * |stations| Q-map rows, which feed both the map and the capped
-  * station table. The heavy lifting (aggregation, latest-per-group,
-  * joins) stays distributed; only the chart-sized result crosses to
-  * the driver, which also sets the charts' order. A refresh is one
-  * concurrent wave of three Spark actions on threads created per
-  * render, and the line chart aggregates the price rows directly,
-  * not the ordered [[FuelQueries.qLine]] (see [[render]]).
+  * per file, ≤|fuel types| bar sums, ≤|fuel types|×|days| line sums,
+  * ≤|stations|×|fuel types| latest rows and the file's station rows;
+  * after the fold, the same bounds for the whole warehouse. The
+  * per-row work (casts, day truncation, the `fuelinfo` string, the
+  * per-file aggregation) stays distributed, and a refresh runs it only
+  * over the files no earlier render has seen: the warehouse is
+  * append-only and a parquet file immutable, so its partials are
+  * cached under (path, mtime, len, schema) and a refresh after one
+  * append reads one file (see [[render]]). The driver folds the
+  * partials, joins them to the stations and sets the charts' order.
   *
   * Charts follow the data-viz method: one measure over categories →
   * single-hue bars (category identity lives on the axis); the
@@ -226,15 +238,40 @@ object FuelDashboard {
   /** Render from the warehouse frames. `maxStations` caps the station
     * table.
     *
-    * One refresh is one concurrent wave of three Spark actions (bar,
-    * line, Q-map), each collected on a thread of its own
-    * ([[concurrently]]). The driver then puts the bars, the line series
-    * and the station table in Spark's `orderBy` order (nulls first,
-    * UTF-8 byte order), so no action pays a range-partitioned sort.
-    * The line aggregates `prices` itself, not [[FuelQueries.qLine]]:
-    * Catalyst keeps qLine's global Sort under a double `avg` (float
-    * sums depend on order), so every refresh would sort every price
-    * row and then discard that order.
+    * A refresh aggregates only the files it has not seen. Each table
+    * reduces to associative per-file partials: `prices` to (sum, count)
+    * per fuel type and per (fuel type, day), the sums exact decimals
+    * (see [[ExactPrice]]), and the latest row by
+    * (`lastupdated`, `seq`) per (station code, fuel type), `stations`
+    * to its rows. One Spark action per table computes the partials of
+    * its unseen files, grouped by file; the two run concurrently, each
+    * on a thread of its own ([[concurrently]]). The driver folds them
+    * with the cached ones in file path order, equi-joins the latest
+    * prices to the stations on the long key and groups the result by
+    * (name, brand, address, lat, lon), as [[FuelQueries.qMap]] does
+    * (left outer: a station without prices shows `""`; a duplicate
+    * station row repeats its prices). Every per-row expression — the
+    * `cast("long")` keys, `date_trunc("day")`, the `fuelinfo` string —
+    * is Spark's, computed in the action; the driver only adds sums,
+    * picks the latest, joins, groups and orders (Spark's `orderBy`
+    * order: nulls first, UTF-8 byte order; the bar is rounded by
+    * Catalyst's own `Round`).
+    *
+    * One deviation from [[FuelQueries.qBar]], by design: a bar rounds
+    * the exact mean, where `qBar` rounds a double `avg` whose last bits
+    * depend on the order its rows are added in. At a 2 dp tie the two
+    * can differ: prices 206.9 and 175.51 have the mean 191.205, which
+    * the bar shows as 191.21 and `qBar` as 191.20 (its double sum is
+    * 382.40999999999997). Prices the exact sum cannot hold (NaN,
+    * ±Infinity, 1e20 and beyond) make their bar and day the double
+    * `avg` that `qBar` computes.
+    *
+    * Partials are kept only for a frame that is a bare parquet scan
+    * (`spark.read.parquet`, no partition columns), per file in
+    * [[LeafFingerprint]] under (path, mtime, len, data schema), and
+    * the files are the relation's own listing, so the render shows
+    * exactly the frame it was given. Any other frame is aggregated
+    * whole by the same action and nothing is cached.
     */
   def render(
       prices: DataFrame,
@@ -242,52 +279,294 @@ object FuelDashboard {
       maxStations: Int = 20,
       generatedAt: String = "n/a",
       refreshSecs: Int = 0): String = {
-    val lineQ = prices
-      .groupBy(col("fueltype"),
-        date_trunc("day", col("lastupdated")).cast("timestamp").as("day"))
-      .agg(avg("price").as("p"))
-    // ONE Q-map execution feeds both the map and the station table:
-    // the map payload is every station (presentation-bounded —
-    // |stations|, the same cardinality the reference ships into
-    // scatter_mapbox), so the table's sort + cut runs on the driver
-    // over the same rows.
-    val fuelPrices = regexp_replace(col("fuelinfo_agg"), "<br>", "; ")
-    val qmapQ = FuelQueries.qMap(stations, prices)
-      .select(col("name"), col("brand"), fuelPrices.as("prices"),
-        col("location_longitude").cast("double"),
-        col("location_latitude").cast("double"),
-        // hover = the reference's hover_data set
-        concat_ws(" — ", col("name"), col("brand"), col("address"), fuelPrices))
-    val Seq(barRows, lineRows, qmap) = concurrently(
-      "bar" -> FuelQueries.qBar(prices), "line" -> lineQ, "map" -> qmapQ)
+    val priceParts = new Partials("prices", prices, pricePartials, PriceParts.of)
+    val stationParts = new Partials("stations", stations, stationRows, (rs: Seq[Row]) => rs.map(Station.of))
+    val actions = Seq(priceParts, stationParts).flatMap(_.action)
+    val rows = concurrently(prices.sparkSession, actions: _*).iterator
+    def next(p: Partials[_]) = if (p.action.isEmpty) Array.empty[Row] else rows.next()
+    val ps = PriceParts.fold(priceParts.parts(next(priceParts)))
+    val sts = stationParts.parts(next(stationParts)).flatten
 
     val sparkOrder = Ordering.Option(DriverResolve.sparkOrdering(StringType).get)
-    val bar = barRows.sortBy(r => Option(r.get(0)))(sparkOrder)
-      .map(r => r.getString(0) -> r.getDouble(1)).toSeq
-    val line = lineRows
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
-      .groupBy(_._1).toSeq.sortBy(s => Option(s._1: Any))(sparkOrder)
-      .map { case (ft, xs) => ft -> xs.map(x => (x._2, x._3)).sortBy(_._1).toSeq }
-    val stationRows = qmap.sortBy(r => Option(r.get(0)))(sparkOrder)
-      .take(maxStations)
-      .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
-    val geo = qmap.filter(r => !r.isNullAt(3) && !r.isNullAt(4))
-      .map(r => (r.getDouble(3), r.getDouble(4), r.getString(5))).toSeq
-    html(bar, line, Seq("station", "brand", "latest prices"), stationRows, generatedAt,
+    val bar = ps.bar.toSeq.sortBy(b => Option(b._1: Any))(sparkOrder)
+      .map { case (ft, s) => ft -> Round(Literal(s.mean), Literal(2)).eval().asInstanceOf[Double] }
+    val line = ps.line.toSeq.groupBy(_._1._1).toSeq.sortBy(s => Option(s._1: Any))(sparkOrder)
+      .map { case (ft, days) => ft -> days.map { case ((_, day), s) => day -> s.mean }.sortBy(_._1) }
+
+    // The Q-map: latest prices joined to the stations, grouped.
+    val fuelinfo = ps.latest.values.toSeq.collect { case l if l.key != null => l.key -> l.fuelinfo }
+      .groupMap(_._1)(_._2)
+    val infoOrder = DriverResolve.sparkOrdering(StringType).get
+    val qmap = sts.groupBy(_.group).values.map { members =>
+      val infos = members.flatMap { s =>
+        Option(s.key).flatMap(fuelinfo.get).fold(Seq(""))(_.filter(_ != null))
+      }
+      QRow(members.head, infos.sorted(infoOrder).mkString("<br>").replace("<br>", "; "))
+    }.toSeq.sorted(QRow.order(sparkOrder))
+    val stationTable = qmap.take(maxStations).map(q => Seq(q.s.name, q.s.brand, q.prices))
+    val geo = qmap.collect { case q if q.s.lon != null && q.s.lat != null =>
+      (q.s.lon.doubleValue, q.s.lat.doubleValue,
+        Seq(q.s.name, q.s.brand, q.s.address, q.prices).filter(_ != null).mkString(" — "))
+    }
+    html(bar, line, Seq("station", "brand", "latest prices"), stationTable, generatedAt,
       refreshSecs, geo)
   }
 
-  /** Collects each named frame on a thread created for this call
-    * (`graft-render-<name>`), joins them all, then returns the rows in
-    * argument order, or rethrows the first failure in argument order.
-    * Fresh threads, not a pool: Spark clones the caller's local
-    * properties (job group, scheduler pool, trace tags) into a thread
-    * when it is created, so only a fresh thread carries the caller's
-    * current ones to its jobs. An interrupt of the caller is passed to
-    * the workers, and the join still waits for them.
+  /** The prices partials, by file: (sum, count) of `price` per fuel type
+    * and per (fuel type, day), and the latest row by (`lastupdated`,
+    * `seq`) per (station code, fuel type) with its join key, order and
+    * `fuelinfo` — one grouping-sets aggregate, one shuffle. `fuelinfo`
+    * is [[FuelQueries.qMap]]'s expression, over the latest row's price.
     */
-  private def concurrently(frames: (String, DataFrame)*): Seq[Array[Row]] = {
-    val workers = frames.map { case (name, df) => new Collect(name, df) }
+  private def pricePartials(prices: DataFrame, fileOf: Column): DataFrame = {
+    val fuelinfo = when(col("price").isNotNull,
+        concat(col("fueltype"), lit(": "), col("price").cast("string")))
+      .otherwise(lit(""))
+    val day = unix_millis(date_trunc("day", col("lastupdated")).cast("timestamp")).as("day")
+    val (file, fueltype, station) = (col("__file"), col("fueltype"), col("stationcode"))
+    prices
+      .select(fileOf.as("__file"), fueltype, day, station, col("price"),
+        struct(col("lastupdated"), col("seq")).as("at"),
+        struct(station.cast("long").as("key"), unix_micros(col("lastupdated")).as("ts"),
+          col("seq"), fuelinfo.as("fuelinfo")).as("latest"))
+      .groupingSets(
+        Seq(Seq(file, fueltype), Seq(file, fueltype, col("day")), Seq(file, station, fueltype)),
+        file, fueltype, col("day"), station)
+      .agg(grouping(col("day")).as("noDay"), grouping(station).as("noStation"),
+        try_sum(col("price").try_cast(ExactPrice)).as("sum"), count("price").as("n"),
+        max_by(col("latest"), col("at")).as("latest"),
+        count(col("price").try_cast(ExactPrice)).as("nExact"), sum(col("price")).as("dsum"))
+  }
+
+  /** The station rows, by file: the long join key, the Q-map's grouping
+    * columns and the map's double-cast coordinates.
+    */
+  private def stationRows(stations: DataFrame, fileOf: Column): DataFrame =
+    stations.select(fileOf, col("code").cast("long"), col("name"), col("brand"),
+      col("address"), col("location_latitude"), col("location_longitude"),
+      col("location_longitude").cast("double"), col("location_latitude").cast("double"))
+
+  /** Prices are summed as decimals, Spark's cast of each double (its
+    * shortest decimal form): a decimal sum is exact, so it does not
+    * depend on the order files and rows are added in, and a render
+    * from cached partials equals one over the whole frame to the last
+    * bit. A double sum would differ between the two in its last bits,
+    * enough to flip a 2 dp label at a tie. The decimal holds only
+    * finite prices below 1e20 and sums below 1e20: for NaN, ±Infinity
+    * and larger values the cast gives null, for a larger sum the sum
+    * does, and such a sum falls back to the double sum, the one
+    * `avg` takes (see [[Sum]]).
+    */
+  private val ExactPrice = DecimalType(38, 18)
+
+  /** A (sum, count) of prices: `exact` the decimal sum when every
+    * counted price and their sum fit [[ExactPrice]], `dsum` the double
+    * sum of the same prices.
+    */
+  private final case class Sum(exact: Option[java.math.BigDecimal], dsum: Double, n: Long) {
+    def +(o: Sum): Sum = Sum(exact.zip(o.exact).map { case (a, b) => a.add(b) }, dsum + o.dsum, n + o.n)
+    /** The mean: the decimal one rounded once to the nearest double, or
+      * else the double sum over the count, as Spark's `avg` computes it
+      * (its last bits then depend on the order the files are added in,
+      * as `avg`'s do on the order of its rows).
+      */
+    def mean: Double = exact.fold(dsum / n)(
+      _.divide(java.math.BigDecimal.valueOf(n), MathContext.DECIMAL128).doubleValue)
+  }
+
+  /** A latest-row candidate: join key and fuelinfo nullable, order
+    * (`lastupdated` micros, `seq`) nulls first, as Spark compares
+    * structs.
+    */
+  private final case class Latest(key: java.lang.Long, at: (Option[Long], Option[Long]), fuelinfo: String)
+
+  private val LatestOrder = Ordering.Tuple2(Ordering.Option(Ordering.Long), Ordering.Option(Ordering.Long))
+
+  /** One file's prices partials, or all files' folded. */
+  private final case class PriceParts(bar: collection.Map[String, Sum],
+      line: collection.Map[(String, Long), Sum], latest: collection.Map[(String, String), Latest])
+
+  private object PriceParts {
+    /** `parts` folded in order: sums add, a later row replaces an
+      * earlier one, and of two tied rows the earlier part's stays.
+      */
+    def fold(parts: Seq[PriceParts]): PriceParts = {
+      val (bar, line) = (mutable.HashMap.empty[String, Sum], mutable.HashMap.empty[(String, Long), Sum])
+      val latest = mutable.HashMap.empty[(String, String), Latest]
+      parts.foreach { p =>
+        p.bar.foreach { case (k, s) => bar(k) = bar.get(k).fold(s)(_ + s) }
+        p.line.foreach { case (k, s) => line(k) = line.get(k).fold(s)(_ + s) }
+        p.latest.foreach { case (k, l) =>
+          if (latest.get(k).forall(o => LatestOrder.lt(o.at, l.at))) latest(k) = l
+        }
+      }
+      PriceParts(bar, line, latest)
+    }
+
+    /** One file's partials from its rows of [[pricePartials]]. */
+    def of(rows: Seq[Row]): PriceParts = {
+      def opt(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+      // A null decimal sum of counted prices is one that overflowed.
+      def sum(r: Row) = {
+        val n = r.getLong(7)
+        val exact = if (r.getLong(9) != n) None
+          else if (n == 0) Some(java.math.BigDecimal.ZERO) else Option(r.getDecimal(6))
+        Sum(exact, if (r.isNullAt(10)) 0d else r.getDouble(10), n)
+      }
+      val (station, fuel) = rows.partition(_.getByte(5) == 0)
+      val (bar, line) = fuel.partition(_.getByte(4) == 1)
+      PriceParts(
+        bar.map(r => r.getString(1) -> sum(r)).toMap,
+        line.map(r => (r.getString(1), r.getLong(2)) -> sum(r)).toMap,
+        station.map { r =>
+          val l = r.getStruct(8)
+          (r.getString(3), r.getString(1)) ->
+            Latest(if (l.isNullAt(0)) null else l.getLong(0), (opt(l, 1), opt(l, 2)), l.getString(3))
+        }.toMap)
+    }
+  }
+
+  /** One station row; `group` is its Q-map group, with the doubles
+    * normalized as Spark groups them (-0.0 with 0.0, every NaN as one).
+    */
+  private final case class Station(key: java.lang.Long, name: String, brand: String, address: String,
+      group: Seq[Any], lon: java.lang.Double, lat: java.lang.Double)
+
+  private object Station {
+    private def normalized(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0d) 0d else d)
+      case other => other
+    }
+    def of(r: Row): Station = {
+      def boxed[A <: AnyRef](i: Int) = r.get(i).asInstanceOf[A]
+      Station(boxed(1), r.getString(2), r.getString(3), r.getString(4),
+        Seq(r.getString(2), r.getString(3), r.getString(4),
+          normalized(r.get(5)), normalized(r.get(6))),
+        boxed(7), boxed(8))
+    }
+  }
+
+  /** A Q-map row: its group's first station and its prices string. */
+  private final case class QRow(s: Station, prices: String)
+
+  private object QRow {
+    /** Name order, then every other column: a total order, so the HTML
+      * does not depend on the fold's order.
+      */
+    def order(str: Ordering[Option[Any]]): Ordering[QRow] = {
+      val dbl = Ordering.Option(Ordering.Double.TotalOrdering)
+      Ordering.by[QRow, (Option[Any], Option[Any], Option[Any], Option[Any], Option[Double], Option[Double])](
+        q => (Option(q.s.name), Option(q.s.brand), Option(q.s.address), Option(q.prices),
+          Option(q.s.lat).map(_.doubleValue), Option(q.s.lon).map(_.doubleValue)))(
+        Ordering.Tuple6(str, str, str, str, dbl, dbl))
+    }
+  }
+
+  /** One table of a render: the per-file partials `fold` makes of the
+    * rows `query` returns, whose first column is the file column it is
+    * given (`_metadata.file_path`, or `""` for a frame aggregated
+    * whole). For a bare parquet scan, the files
+    * are the relation's listing, those cached under kind
+    * `fuel.render.<name>` are reused, and [[action]] reads only the
+    * rest; for any other frame, [[action]] aggregates the whole frame
+    * and nothing is cached.
+    */
+  private final class Partials[P](name: String, df: DataFrame, query: (DataFrame, Column) => DataFrame,
+      fold: Seq[Row] => P) {
+    private val spark = df.sparkSession
+    // date_trunc("day") depends on the session time zone
+    private val kind = s"fuel.render.$name@${spark.sessionState.conf.sessionLocalTimeZone}"
+    private val scan = bareParquetScan(df)
+    private val files = scan.toSeq.flatMap(_.files).sortBy(_.getPath.toString)
+    private val schema = scan.fold("")(_.relation.dataSchema.json)
+    private val known: Map[Path, P] = files.flatMap(f =>
+      LeafFingerprint.cachedFile[P](kind, f, schema).map(f.getPath -> _)).toMap
+    private val unseen = files.filterNot(f => known.contains(f.getPath))
+
+    /** The one action this table needs, as (table, its jobs' call
+      * site, the action); None when every file is cached.
+      */
+    val action: Option[(String, String, () => Array[Row])] =
+      if (scan.isEmpty)
+        Some((name, s"fuel.render $name (whole frame)",
+          () => query(df, lit("")).collect()))
+      else if (unseen.isEmpty) None
+      else {
+        val read = if (unseen.size == files.size) df else scan.get.read(unseen)
+        Some((name, s"fuel.render $name partials (${unseen.size} files)",
+          () => query(read, col("_metadata.file_path")).collect()))
+      }
+
+    /** Every file's partial in path order (one for a whole frame), the
+      * unseen ones made from `rows` (the action's) and cached.
+      */
+    def parts(rows: Array[Row]): Seq[P] =
+      if (scan.isEmpty) Seq(fold(rows.toSeq))
+      else {
+        // `_metadata.file_path` is the URL-encoded path URI
+        val byFile = rows.toSeq.groupBy(r => new Path(new URI(r.getString(0))))
+        files.map { f =>
+          known.getOrElse(f.getPath, {
+            val fileRows = byFile.getOrElse(f.getPath, Nil)
+            val p = fold(fileRows)
+            LeafFingerprint.cacheFile(spark, kind, f, schema, p, bytes(fileRows))
+            p
+          })
+        }
+      }
+  }
+
+  /** ≈ heap bytes of one file's partial: its rows' fields and strings. */
+  private def bytes(rows: Seq[Row]): Long = rows.iterator.map { r =>
+    r.toSeq.iterator.map {
+      case s: String => 48L + 2L * s.length
+      case r: Row => r.toSeq.iterator.map { case s: String => 48L + 2L * s.length; case _ => 24L }.sum
+      case _ => 24L
+    }.sum + 32L
+  }.sum
+
+  /** A frame that is a bare parquet scan: its analyzed plan is one
+    * relation over a parquet `HadoopFsRelation` without partition
+    * columns.
+    */
+  private final class ParquetScan(spark: SparkSession, val relation: HadoopFsRelation) {
+    /** The relation's listing: the files a scan of it reads (non-empty
+      * data files).
+      */
+    def files: Seq[FileStatus] = relation.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+
+    /** A read of just `some` of its files, with its schema and options. */
+    def read(some: Seq[FileStatus]): DataFrame =
+      spark.read.format("parquet").schema(relation.dataSchema)
+        .options(relation.options.filter { case (k, _) => !Set("path", "paths")(k.toLowerCase) })
+        .option(DataSource.GLOB_PATHS_KEY, "false") // file names are not patterns
+        .load(some.map(_.getPath.toString): _*)
+  }
+
+  private def bareParquetScan(df: DataFrame): Option[ParquetScan] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.partitionSchema.isEmpty &&
+            r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            !r.dataSchema.fieldNames.contains("_metadata") =>
+          Some(new ParquetScan(df.sparkSession, r))
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Runs each (table, call site, body) on a thread created for this
+    * call (`graft-render-<table>`), its jobs named by the call site,
+    * joins them all, then returns the results in argument order, or
+    * rethrows the first failure in argument order. Fresh threads, not
+    * a pool: Spark clones the caller's local properties (job group,
+    * scheduler pool, trace tags) into a thread when it is created, so
+    * only a fresh thread carries the caller's current ones to its
+    * jobs. An interrupt of the caller is passed to the workers, and
+    * the join still waits for them.
+    */
+  private def concurrently[A](spark: SparkSession, bodies: (String, String, () => A)*): Seq[A] = {
+    val workers = bodies.map { case (name, site, body) => new Worker(spark, name, site, body) }
     workers.foreach(_.start())
     var interrupted = false
     workers.foreach { w =>
@@ -296,14 +575,15 @@ object FuelDashboard {
         catch { case _: InterruptedException => interrupted = true; workers.foreach(_.interrupt()) }
     }
     if (interrupted) Thread.currentThread.interrupt()
-    workers.map(_.rows.fold(t => throw t, identity))
+    workers.map(_.result.fold(t => throw t, identity))
   }
 
-  private final class Collect(name: String, df: DataFrame) extends Thread(s"graft-render-$name") {
+  private final class Worker[A](spark: SparkSession, name: String, site: String, body: () => A)
+      extends Thread(s"graft-render-$name") {
     setDaemon(true)
-    @volatile var rows: Either[Throwable, Array[Row]] = _
+    @volatile var result: Either[Throwable, A] = _
     override def run(): Unit =
-      rows = try Right(df.collect()) catch { case t: Throwable => Left(t) }
+      result = try Right(StreamOps.withCallSite(spark, site)(body())) catch { case t: Throwable => Left(t) }
   }
 
   /** Atomic publish: write to a temp sibling, then rename — readers

@@ -1,6 +1,7 @@
 package graft.fuel
 
 import java.io.FileNotFoundException
+import java.util.UUID
 
 import scala.util.control.NonFatal
 
@@ -133,7 +134,7 @@ object FuelPipeline {
         Warehouse.append(
           split.rejected.select(col("_corrupt").as("raw"), col("_reject_reason")),
           s"$warehouseDir/dead_letters_raw")
-        consume(batch)
+        consume(batch, "ingest_routed", batchId)
       }
       .queryName("ingest_routed")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_routed")
@@ -192,22 +193,30 @@ object FuelPipeline {
     * A batch replayed after a crash between this move and Spark's
     * commit finds its files gone and appends nothing (a missing root
     * path lists as empty).
+    *
+    * A rename never replaces a file (`InProcessLocalFileSystem`), so a
+    * name already in [[Committed]] (a file landed again under a reused
+    * name) moves under a name made unique for it instead of staying in
+    * the landing dir, where every poll would list it.
     */
-  private def consume(batch: DataFrame): Unit = {
-    val files = batchFiles(batch)
-    if (files.nonEmpty) {
-      val fs = files.head.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      files.groupBy(_.getParent).foreach { case (dir, inDir) =>
-        val committed = new Path(dir, Committed)
-        fs.mkdirs(committed)
-        inDir.foreach { f =>
-          try fs.rename(f, new Path(committed, f.getName))
-          catch { case _: FileNotFoundException => } // moved by an earlier attempt
+  private def consume(batch: DataFrame, query: String, batchId: Long): Unit =
+    StreamOps.withCallSite(batch.sparkSession, s"fuel.$query consume (batch $batchId)") {
+      val files = batchFiles(batch)
+      if (files.nonEmpty) {
+        val fs = files.head.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+        files.groupBy(_.getParent).foreach { case (dir, inDir) =>
+          val committed = new Path(dir, Committed)
+          fs.mkdirs(committed)
+          inDir.foreach { f =>
+            try {
+              if (!fs.rename(f, new Path(committed, f.getName)) && fs.exists(f))
+                fs.rename(f, new Path(committed, s"${UUID.randomUUID()}-${f.getName}"))
+            } catch { case _: FileNotFoundException => } // moved by an earlier attempt
+          }
+          if (sweepDue(committed, System.currentTimeMillis())) sweep(fs, committed)
         }
-        if (sweepDue(committed, System.currentTimeMillis())) sweep(fs, committed)
       }
     }
-  }
 
   /** How long a committed landing file is kept, and the least time
     * between two sweeps of one [[Committed]] directory. The reference
@@ -290,8 +299,10 @@ object FuelPipeline {
     val ingestPrices = prices.valid.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Warehouse.append(Warehouse.withSurrogateId(batch, batchId), pricesTable)
-        consume(batch)
+        StreamOps.withCallSite(spark, s"fuel.ingest_prices append (batch $batchId)") {
+          Warehouse.append(Warehouse.withSurrogateId(batch, batchId), pricesTable)
+        }
+        consume(batch, "ingest_prices", batchId)
       }
       .queryName("ingest_prices")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_prices")
@@ -304,9 +315,11 @@ object FuelPipeline {
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // sorted so a replayed batch numbers its rows the same way
-        Warehouse.append(
-          Warehouse.withSurrogateId(batch.sortWithinPartitions("code"), batchId), stationsTable)
-        consume(batch)
+        StreamOps.withCallSite(spark, s"fuel.ingest_stations append (batch $batchId)") {
+          Warehouse.append(
+            Warehouse.withSurrogateId(batch.sortWithinPartitions("code"), batchId), stationsTable)
+        }
+        consume(batch, "ingest_stations", batchId)
       }
       .queryName("ingest_stations")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_stations")
@@ -335,28 +348,30 @@ object FuelPipeline {
       .union(committed(stationsTable, FuelModel.warehouseStationsSchema).select(col("id")))
       .writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        readWarehouse(spark, warehouseDir).foreach { case (pricesNow, stationsNow) =>
-          val qm = FuelQueries.qMap(stationsNow, pricesNow)
-          qm.createOrReplaceTempView("fuel_qmap_live")
-          // Live dashboard: atomically republish the static-HTML twin
-          // each tick — the engine-side equivalent of the reference's
-          // Dash interval callback (`DataAnalysis.py:73-89`). The view
-          // above is lazy, so the render runs the flagship join itself
-          // (once per render), concurrently with the bar and line
-          // actions on threads it creates per call; they inherit this
-          // query's job group, so stopping the query cancels them. A
-          // failed publish is best-effort — it must not kill the
-          // streaming query (an interrupt from stop() still ends it).
-          dashboardPath.foreach { p =>
-            try FuelDashboard.writeAtomic(p, FuelDashboard.render(
-              pricesNow, stationsNow,
-              generatedAt = java.time.Instant.now().toString,
-              // browser polls the republished file ≈ the Dash
-              // interval callback's live refresh
-              refreshSecs = 2))
-            catch { case NonFatal(e) =>
-              System.err.println(s"[pipeline] dashboard publish failed: ${e.getMessage}")
+      .foreachBatch { (_: DataFrame, batchId: Long) =>
+        StreamOps.withCallSite(spark, s"fuel.qmap_live refresh (batch $batchId)") {
+          readWarehouse(spark, warehouseDir).foreach { case (pricesNow, stationsNow) =>
+            val qm = FuelQueries.qMap(stationsNow, pricesNow)
+            qm.createOrReplaceTempView("fuel_qmap_live")
+            // Live dashboard: atomically republish the static-HTML twin
+            // each tick — the engine-side equivalent of the reference's
+            // Dash interval callback (`DataAnalysis.py:73-89`). The view
+            // above is lazy; the render aggregates only the warehouse
+            // files no earlier tick has seen, on threads it creates per
+            // call, which inherit this query's job group, so stopping
+            // the query cancels them. A failed publish is best-effort —
+            // it must not kill the streaming query (an interrupt from
+            // stop() still ends it).
+            dashboardPath.foreach { p =>
+              try FuelDashboard.writeAtomic(p, FuelDashboard.render(
+                pricesNow, stationsNow,
+                generatedAt = java.time.Instant.now().toString,
+                // browser polls the republished file ≈ the Dash
+                // interval callback's live refresh
+                refreshSecs = 2))
+              catch { case NonFatal(e) =>
+                System.err.println(s"[pipeline] dashboard publish failed: ${e.getMessage}")
+              }
             }
           }
         }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The listing guard for driver caches of table state, and the one
@@ -19,11 +19,14 @@ import org.apache.spark.sql.SparkSession
   * derived from a directory's contents (the survivor manifest of
   * [[ManifestedSink]], the prior-spent memo of
   * [[graft.streaming.BudgetGate]], the footer schema of a catalog
-  * table), keyed by (kind, dir). Its total size is capped
-  * JVM-wide at `spark.graft.manifest.cacheMaxBytes` (default 256 MB):
-  * past the cap the least recently used entries go, so a long-lived
-  * JVM that streams into ever-new scratch dirs stays bounded, and a
-  * miss only costs the read the cache saves.
+  * table), keyed by (kind, dir), and for every value derived from one
+  * immutable file ([[cachedFile]]/[[cacheFile]]: the dashboard's
+  * per-file partials), keyed by (kind, path) and guarded by the
+  * file's (mtime, len) and the schema it was read with. Its total
+  * size is capped JVM-wide at `spark.graft.manifest.cacheMaxBytes`
+  * (default 256 MB): past the cap the least recently used entries go,
+  * so a long-lived JVM that streams into ever-new scratch dirs stays
+  * bounded, and a miss only costs the read the cache saves.
   */
 object LeafFingerprint {
 
@@ -47,7 +50,8 @@ object LeafFingerprint {
   val CacheMaxBytesKey = "spark.graft.manifest.cacheMaxBytes"
   private val DefaultCacheMaxBytes = 256L << 20
 
-  private final class Entry(val fingerprint: Set[(String, Long, Long)], val value: Any, val bytes: Long)
+  // fingerprint: a dir's leaf set, or a file's (mtime, len, schema)
+  private final class Entry(val fingerprint: Any, val value: Any, val bytes: Long)
 
   // access-ordered: iteration starts at the least recently used entry
   private val entries = new java.util.LinkedHashMap[(String, String), Entry](16, 0.75f, true)
@@ -62,16 +66,8 @@ object LeafFingerprint {
     * still matches the one it was cached under; a stale entry is
     * dropped. Lists `dir` only when an entry exists.
     */
-  def cached[V](spark: SparkSession, kind: String, dir: String): Option[V] = {
-    val key = (kind, dir)
-    entries.synchronized(Option(entries.get(key))).flatMap { e =>
-      if (e.fingerprint == apply(spark, dir)) Some(e.value.asInstanceOf[V])
-      else {
-        entries.synchronized(if (entries.get(key) eq e) drop(key))
-        None
-      }
-    }
-  }
+  def cached[V](spark: SparkSession, kind: String, dir: String): Option[V] =
+    lookup(kind, dir, apply(spark, dir))
 
   /** Caches `value` (≈ `bytes` on the heap) for (`kind`, `dir`) under
     * `dir`'s current fingerprint, then evicts least-recently-used
@@ -79,9 +75,43 @@ object LeafFingerprint {
     * on its own is not kept.
     */
   def cache(spark: SparkSession, kind: String, dir: String, value: Any, bytes: Long): Unit = {
-    val key = (kind, dir)
     val fingerprint = apply(spark, dir)
-    val size = bytes + fingerprint.iterator.map(f => 64L + 2L * f._1.length).sum
+    put(spark, kind, dir, fingerprint, value,
+      bytes + fingerprint.iterator.map(f => 64L + 2L * f._1.length).sum)
+  }
+
+  /** The value cached for (`kind`, `file`'s path) while the file's
+    * (mtime, len) and `schema` (the schema it is read with) match
+    * those it was cached under; a stale entry is dropped. No listing:
+    * `file` comes from the caller's own.
+    */
+  def cachedFile[V](kind: String, file: FileStatus, schema: String): Option[V] =
+    lookup(kind, file.getPath.toString, (file.getModificationTime, file.getLen, schema))
+
+  /** Caches `value` (≈ `bytes`) for (`kind`, `file`'s path) under the
+    * file's (mtime, len) and `schema`, within the same cap as [[cache]].
+    */
+  def cacheFile(spark: SparkSession, kind: String, file: FileStatus, schema: String,
+      value: Any, bytes: Long): Unit = {
+    val path = file.getPath.toString
+    put(spark, kind, path, (file.getModificationTime, file.getLen, schema), value,
+      bytes + 64L + 2L * (path.length + schema.length))
+  }
+
+  private def lookup[V](kind: String, at: String, fingerprint: Any): Option[V] = {
+    val key = (kind, at)
+    entries.synchronized(Option(entries.get(key))).flatMap { e =>
+      if (e.fingerprint == fingerprint) Some(e.value.asInstanceOf[V])
+      else {
+        entries.synchronized(if (entries.get(key) eq e) drop(key))
+        None
+      }
+    }
+  }
+
+  private def put(spark: SparkSession, kind: String, at: String, fingerprint: Any,
+      value: Any, size: Long): Unit = {
+    val key = (kind, at)
     val cap = spark.conf.getOption(CacheMaxBytesKey).map(_.toLong).getOrElse(DefaultCacheMaxBytes)
     entries.synchronized {
       drop(key)

@@ -244,6 +244,8 @@ object Mqtt {
   * existing file-stream source tails it. One file per message mirrors
   * the reference's one-snapshot-per-tick cadence; a high-rate topic
   * would batch N messages per file with the same rename discipline.
+  * The n-th message of an instance lands as `msg-<n, 8 digits>-<instance
+  * id>.jsonl`, so names never repeat across restarts over one dir.
   */
 final class MqttLanding(
     host: String,
@@ -255,6 +257,9 @@ final class MqttLanding(
 
   private val client = new Mqtt.Client(host, port, clientId).connect()
   private val seq = new AtomicLong(0)
+  // The counter restarts with each instance; a file stream source takes
+  // a path it has seen before as old and skips it.
+  private val instance = java.util.UUID.randomUUID().toString.take(8)
   private val closed = new AtomicBoolean(false)
   Files.createDirectories(Paths.get(landingDir))
   client.subscribe(Seq(topic))
@@ -265,8 +270,8 @@ final class MqttLanding(
   private val pump = new Thread(() =>
     client.receiveLoop { (_, payload) =>
       val n = seq.incrementAndGet()
-      val tmp = Paths.get(landingDir, s".part-$n")
-      val dst = Paths.get(landingDir, f"msg-$n%08d.jsonl")
+      val tmp = Paths.get(landingDir, s".part-$n-$instance")
+      val dst = Paths.get(landingDir, f"msg-$n%08d-$instance.jsonl")
       Files.write(tmp, payload)
       Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     }, s"mqtt-landing-$topic")

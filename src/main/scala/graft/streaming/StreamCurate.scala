@@ -58,12 +58,15 @@ object StreamCurate {
     require(validPct >= 1 && validPct <= 99,
       "StreamCurate: validPct must be in [1, 99]")
     val gated = TextAnalysis.qualityKeep(batch, textCol) // map-only, no join-back (r19)
-    val kept = NearDupGate.acceptBatch(gated, batchId, idCol, textCol,
-      ndStateDir, exact = exact)
+    def named(stage: String)(body: => DataFrame): DataFrame =
+      StreamOps.withCallSite(batch.sparkSession, s"curate $stage (batch $batchId)")(body)
+    val kept = named("near-dup gate")(
+      NearDupGate.acceptBatch(gated, batchId, idCol, textCol, ndStateDir, exact = exact))
     val withTokens = kept.select(col(idCol), col(langCol),
       TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    BudgetGate.acceptBatch(withTokens, batchId, langCol, idCol, "n_tokens",
-        budgetStateDir, budgetPerLang)
+    named("budget gate")(
+      BudgetGate.acceptBatch(withTokens, batchId, langCol, idCol, "n_tokens",
+        budgetStateDir, budgetPerLang))
       .withColumn("split",
         when(TextAnalysis.splitBucket(col(idCol)) < lit(100 - validPct),
           lit("train")).otherwise(lit("valid")))
@@ -94,10 +97,12 @@ object StreamCurate {
         graft.operators.Materialize.batchScope(
           curateBatch(b, id, idCol, textCol, langCol, ndStateDir,
             budgetStateDir, budgetPerLang, validPct, exact)) { out =>
-          out.withColumn("batch_id", lit(id))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(acceptedDir)
+          StreamOps.withCallSite(b.sparkSession, s"curate accepted write (batch $id)") {
+            out.withColumn("batch_id", lit(id))
+              .write.partitionBy("batch_id")
+              .option("partitionOverwriteMode", "dynamic")
+              .mode("overwrite").parquet(acceptedDir)
+          }
         }
         ()
       }

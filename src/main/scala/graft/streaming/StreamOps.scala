@@ -16,6 +16,23 @@ import graft.fuel.FuelModel.PriceRecord
   */
 object StreamOps {
 
+  /** Runs `body` with the Spark jobs it starts on this thread named
+    * `site`, the call site job listeners and the UI show, then restores
+    * the caller's. A stream pins its creation call site on its thread,
+    * so without this every job of a `foreachBatch` body carries it.
+    * Sets the short form only: the micro-batch's job description and
+    * the rest of its local properties stay.
+    */
+  def withCallSite[A](spark: SparkSession, site: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(site)
+    try body finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  // SparkContext's local property for a job's short call site
+  private val CallSiteShort = "callSite.short"
+
   /** St1 — high-water-mark gate (`main.py:45-51`), exact semantics:
     * emit a record iff its event time is *strictly newer* than the
     * max already emitted; ties at the watermark are dropped.

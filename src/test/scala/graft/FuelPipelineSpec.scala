@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -14,14 +15,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
 
 import graft.fuel.{FuelCleaning, FuelModel, FuelPipeline, FuelQueries}
-import graft.sources.Warehouse
+import graft.sources.{Mqtt, MqttLanding, Warehouse}
+import graft.streaming.StreamOps
 
 /** `FuelPipeline.start` on the golden corpus: the live views equal the
   * batch queries over the warehouse, the ingests move what they
-  * committed out of their landing dirs and number rows uniquely
-  * across micro-batches, list a burst of landing files without a
-  * Spark job, keep committed files for an hour, and the warehouse read
-  * `qmap_live` repeats every tick.
+  * committed out of their landing dirs (under a name of its own when
+  * the name is taken) and number rows uniquely across micro-batches,
+  * a restarted MQTT landing's messages land, a burst of landing files
+  * is listed without a Spark job, committed files are kept for an
+  * hour, each stage names its jobs, and the warehouse read `qmap_live`
+  * repeats every tick.
   */
 class FuelPipelineSpec extends SparkSpecBase {
 
@@ -215,6 +219,103 @@ class FuelPipelineSpec extends SparkSpecBase {
     assert(codes.size === codes.distinct.size, "a station landed twice")
     assert(codes.toSet === landed)
     assert(landingFiles(stationsIn).isEmpty)
+  }
+
+  private def waitUntil(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, what)
+  }
+
+  private def cleanSeqs(lines: Seq[String]): Set[Long] = {
+    import spark.implicits._
+    FuelCleaning.cleanPrices(spark.read.schema(FuelModel.rawPriceSchema).json(lines.toDS())).valid
+      .select("seq").collect().map(_.getLong(0)).toSet
+  }
+
+  test("a landing restarted over its dir under a running pipeline lands the second instance's messages too") {
+    val (pricesIn, stationsIn, wh) = pipelineDirs("graft_fuel_relanding")
+    val lines = Files.readAllLines(Paths.get(resource("/fuel/prices.jsonl"))).asScala.toSeq.take(10)
+    val broker = new MiniMqttBroker
+    try {
+      val qs = FuelPipeline.start(spark, pricesIn.toString, stationsIn.toString, wh)
+      try {
+        val pub = new Mqtt.Client("127.0.0.1", broker.port, "spec-relanding-pub").connect()
+        try Seq(lines.take(5), lines.drop(5)).zipWithIndex.foreach { case (part, k) =>
+          // each instance counts its messages from 1 again
+          val landing = new MqttLanding("127.0.0.1", broker.port, "fuel/prices", pricesIn.toString,
+            s"spec-relanding-$k")
+          try {
+            part.foreach(m => pub.publish("fuel/prices", m.getBytes(StandardCharsets.UTF_8), qos = 1))
+            waitUntil(s"instance $k landed its messages")(landing.landed == part.size)
+          } finally landing.close()
+          qs.foreach(_.processAllAvailable())
+        } finally pub.close()
+      } finally qs.foreach(_.stop())
+    } finally broker.close()
+    val stored = spark.read.parquet(s"$wh/prices").select("seq").collect().map(_.getLong(0)).toSeq
+    assert(stored.size === stored.distinct.size)
+    assert(stored.toSet === cleanSeqs(lines))
+    assert(landingFiles(pricesIn).isEmpty)
+    assert(landingFiles(pricesIn.resolve(FuelPipeline.Committed)).size === 10)
+  }
+
+  test("a landing file whose name is already committed moves under a name of its own, not left to be listed again") {
+    val (pricesIn, stationsIn, wh) = pipelineDirs("graft_fuel_recommit")
+    val committed = Files.createDirectories(pricesIn.resolve(FuelPipeline.Committed))
+    Files.write(committed.resolve("msg-1.jsonl"), Seq("{}").asJava)
+    val lines = Files.readAllLines(Paths.get(resource("/fuel/prices.jsonl"))).asScala.toSeq.take(3)
+    Files.write(pricesIn.resolve("msg-1.jsonl"), lines.asJava)
+    val qs = FuelPipeline.start(spark, pricesIn.toString, stationsIn.toString, wh)
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+
+    assert(landingFiles(pricesIn).isEmpty)
+    val names = landingFiles(committed)
+    assert(names.size === 2 && names("msg-1.jsonl"), names)
+    assert(Files.readAllLines(committed.resolve("msg-1.jsonl")).asScala === Seq("{}"), "the earlier file was replaced")
+    val moved = committed.resolve((names - "msg-1.jsonl").head)
+    assert(moved.getFileName.toString.endsWith("-msg-1.jsonl"))
+    assert(Files.readAllLines(moved).asScala === lines)
+    val stored = spark.read.parquet(s"$wh/prices").select("seq").collect().map(_.getLong(0)).toSet
+    assert(stored === cleanSeqs(lines))
+  }
+
+  test("each stage names its jobs and the micro-batch keeps its description; the caller's call site comes back") {
+    val (pricesIn, stationsIn, wh) = pipelineDirs("graft_fuel_sites")
+    Files.copy(Paths.get(resource("/fuel/stations.jsonl")), stationsIn.resolve("stations.jsonl"))
+    Files.copy(Paths.get(resource("/fuel/prices.jsonl")), pricesIn.resolve("prices.jsonl"))
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, String)]() // (call site, description)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val site = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")
+        val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        jobs.add((site, desc.getOrElse("")))
+      }
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val qs = FuelPipeline.start(spark, pricesIn.toString, stationsIn.toString, wh,
+        dashboardPath = Some(Paths.get(wh).resolveSibling("dash.html").toString))
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    val seen = jobs.asScala.toSeq
+    Seq("ingest_prices" -> "fuel.ingest_prices append (batch 0)",
+        "ingest_stations" -> "fuel.ingest_stations append (batch 0)",
+        "qmap_live" -> "fuel.render prices partials (1 files)",
+        "qmap_live" -> "fuel.render stations partials (1 files)").foreach { case (query, site) =>
+      assert(seen.exists { case (s, d) => s == site && d.startsWith(query) }, s"no job at $site in $seen")
+    }
+
+    sc.setCallSite("caller")
+    try {
+      StreamOps.withCallSite(spark, "stage") { assert(sc.getLocalProperty("callSite.short") === "stage") }
+      assert(sc.getLocalProperty("callSite.short") === "caller")
+    } finally sc.clearCallSite()
+    StreamOps.withCallSite(spark, "stage")(())
+    assert(sc.getLocalProperty("callSite.short") === null)
   }
 
   test("committed landing files older than the retention age are swept on the ingest's own thread, the rest stay") {
