@@ -73,7 +73,7 @@ object SimilarityQueries {
     * replays it hash-exactly ([[Embeddings.signBits64DuckSql]]).
     *
     * The signature index is a ONE-OFF per corpus (at scale it is
-    * persisted next to the vectors, like `saveIvfIndex`) — memoized
+    * persisted next to the vectors) — memoized
     * per sf dir and materialized so repeated invocations (the bench's
     * min-of-N) time the serving path: a 9-byte-per-vector sig scan +
     * bounded re-rank, not the index build.
@@ -127,7 +127,7 @@ object SimilarityQueries {
     * SimilaritySpec.
     *
     * The codebook+codes build is a ONE-OFF per corpus (at scale it is
-    * persisted, like `saveIvfIndex`) — it is memoized per sf dir and
+    * persisted) — it is memoized per sf dir and
     * materialized, so repeated invocations (the bench's min-of-N)
     * time the serving path: ADC scan + exact re-rank.
     */

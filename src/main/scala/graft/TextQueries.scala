@@ -995,9 +995,9 @@ object TextQueries {
     val primary = col("line").contains("\"filename\": \"seg-")
     val stateDir = graft.streaming.Scratch.tmpDir("graft_cdxf_state")
     val recsDir = graft.streaming.Scratch.tmpDir("graft_cdxf_recs")
-    val n0 = graft.streaming.CdxFetchStream.fetchBatch(
+    graft.streaming.CdxFetchStream.fetchBatch(
       lines.filter(docId % 2 === 0 && primary), 0L, stateDir, recsDir, dir)
-    val n1 = graft.streaming.CdxFetchStream.fetchBatch(
+    graft.streaming.CdxFetchStream.fetchBatch(
       lines.filter(docId % 2 =!= 0 || !primary), 1L, stateDir, recsDir, dir)
     // committed manifest view: crash orphans invisible
     val landed = graft.sources.Warc.readRecords(s, recsDir)
@@ -2023,7 +2023,7 @@ object TextQueries {
     * adjacent token pairs (≥5 occurrences) by exact rational lift.
     */
   private def bigramLiftQ(s: SparkSession, d: String): DataFrame =
-    Keywords.bigramLift(Tables.documents(s, d), "doc_id", "text",
+    Keywords.bigramLift(Tables.documents(s, d), "text",
       minCount = 5L, k = 40)
 
   /** Streaming per-group token-budget gate

@@ -122,12 +122,6 @@ object FuelCleaning {
     */
   private def try_cast_double(c: Column): Column = c.try_cast("double")
 
-  /** Serialize cleaned prices back to the wire shape (timestamp →
-    * `dd/MM/yyyy HH:mm:ss` string — `DataCleaning.py:79`, P8).
-    */
-  def pricesToWire(clean: DataFrame): DataFrame =
-    clean.withColumn("lastupdated", date_format(col("lastupdated"), TsFormat))
-
   /** Parse raw JSON wire messages with a corrupt-record column
     * (SURVEY §1.4): malformed JSON lands in `_corrupt` instead of
     * killing the consumer — the dead-letter path for *unparseable*

@@ -71,39 +71,6 @@ object FuelPipeline {
     spark.stop()
   }
 
-  /** Ingest raw API envelope snapshots (the reference's actual wire
-    * shape — one nested `{stations:[...], prices:[...]}` JSON per
-    * fetch, `DataGathering.py:28-39`) as streams: explode both arrays
-    * in the stream, synthesize a deterministic per-record sequence id
-    * from (snapshot file, position) for tie-breaking, and feed the
-    * same cleaning pipeline. `from_json`+`explode` IS the engine's
-    * `pd.json_normalize` (SURVEY §1.4).
-    *
-    * Live fetch: `sources.Rest.snapshotToLanding` (OAuth2 client-
-    * credentials GET, `DataGathering.py:5-39`) drops each periodic
-    * snapshot into `envelopeDir` as one atomically-renamed file — the
-    * file source's unit of exactly-once — closing the loop from the
-    * real API to this stream without a custom source.
-    */
-  def envelopeStreams(spark: SparkSession, envelopeDir: String): (DataFrame, DataFrame) = {
-    val raw = spark.readStream
-      .schema(FuelModel.apiEnvelopeSchema)
-      .json(envelopeDir)
-      .withColumn("__src", input_file_name())
-    val prices = raw
-      .select(col("__src"), posexplode(col("prices")).as(Seq("pos", "p")))
-      .select(col("p.stationcode"), col("p.fueltype"),
-        col("p.price").cast("string").as("price"), col("p.lastupdated"),
-        xxhash64(col("__src"), col("pos")).as("seq"))
-    val stations = raw
-      .select(explode(col("stations")).as("s"))
-      .select(col("s.brandid"), col("s.stationid"), col("s.brand"),
-        col("s.code"), col("s.name"), col("s.address"),
-        col("s.location.latitude").cast("string").as("location_latitude"),
-        col("s.location.longitude").cast("string").as("location_longitude"))
-    (prices, stations)
-  }
-
   /** S10 — the content-based-router variant of the ingest leg: ONE
     * mixed cleaned topic (a dir of raw JSON wire lines standing in
     * for the MQTT transport, like the other legs) consumed by a

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -502,8 +501,8 @@ object SimHash64Expr {
   * the dominant cost of the signature pass at scale) with a
   * polynomial combine over the already-computed token hashes:
   * `h(i..i+k-1) = fold(h*PRIME + tok)`. Output is distinct (set
-  * semantics, matching `shingles`' `array_distinct`); inputs shorter
-  * than k yield the single whole-input combine.
+  * semantics); inputs shorter than k yield the single whole-input
+  * combine.
   */
 case class ShingleHashExpr(child: Expression, k: Int)
     extends UnaryExpression {

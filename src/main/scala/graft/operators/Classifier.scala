@@ -245,32 +245,7 @@ object Classifier {
       labelCol: String,
       classes: Seq[String],
       dim: Int,
-      iters: Int): Seq[Array[Long]] =
-    trainOvr(df, textCol, labelCol, classes, dim, iters)._1
-
-  /** AVERAGED one-vs-rest trainer — [[perceptronTrainAvg]]'s K-class
-    * sibling: the K summed-trajectory vectors `Σ_{t=1..T} w_t^(c)`
-    * from one [[perceptronTrainOvr]] run. All K classes share the
-    * same T, so the uniform ×T scaling cancels in the argmax and
-    * [[perceptronPredictOvr]] over these vectors IS the averaged
-    * multi-class decision.
-    */
-  def perceptronTrainOvrAvg(
-      df: DataFrame,
-      textCol: String,
-      labelCol: String,
-      classes: Seq[String],
-      dim: Int,
-      iters: Int): Seq[Array[Long]] =
-    trainOvr(df, textCol, labelCol, classes, dim, iters)._2
-
-  private def trainOvr(
-      df: DataFrame,
-      textCol: String,
-      labelCol: String,
-      classes: Seq[String],
-      dim: Int,
-      iters: Int): (Seq[Array[Long]], Seq[Array[Long]]) = {
+      iters: Int): Seq[Array[Long]] = {
     require(classes.nonEmpty, "perceptronTrainOvr: empty class list")
     require(classes.distinct == classes, "perceptronTrainOvr: duplicate classes")
     require(dim >= 1 && iters >= 1,
@@ -281,7 +256,6 @@ object Classifier {
         coalesce(col(textCol), lit("")), dim).as("__f")))
     try {
       val w = Array.fill(classes.size, dim + 1)(0L)
-      val wSum = Array.fill(classes.size, dim + 1)(0L)
       val clsArr = array(classes.map(lit): _*)
       (1 to iters).foreach { _ =>
         val wMatrix = array(w.map(row => array(row.toSeq.map(lit): _*)).toSeq: _*)
@@ -304,14 +278,8 @@ object Classifier {
           .agg(sum(col("__y")).as("__g"))
           .collect() // ≤ K·(dim+1) rows — still the codebook collect
         grad.foreach(r => w(r.getInt(0))(r.getInt(1)) += r.getLong(2))
-        var c = 0
-        while (c < wSum.length) {
-          var i = 0
-          while (i < wSum(c).length) { wSum(c)(i) += w(c)(i); i += 1 }
-          c += 1
-        }
       }
-      (w.toSeq, wSum.toSeq)
+      w.toSeq
     } finally Materialize.release(data)
   }
 

@@ -20,19 +20,6 @@ import graft.functions.Det
   */
 object Dedup {
 
-  /** Token shingles of size `k` (contiguous token windows) — the
-    * standard near-dup unit. Pure per-row array ops, codegen'd.
-    */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = TextAnalysis.tokens(text)
-    when(size(toks) < k, array(concat_ws(" ", toks)))
-      .otherwise(
-        array_distinct(
-          transform(
-            sequence(lit(0), size(toks) - k),
-            i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
-  }
-
   /** Exact dedup: group identical content by md5. Returns one row per
     * distinct content with the group size and the kept (minimum) id.
     * At 100 TB this shuffles only `(16-byte hash, id)` pairs, never

@@ -130,7 +130,6 @@ object Graphs {
       dNum: Int = 85): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(dNum >= 0 && dNum <= 100, "damping numerator in [0,100]")
-    val spark = edges.sparkSession
     val d = lit(new java.math.BigDecimal(dNum).movePointLeft(2)).cast(RankType)
     val oneMinusD =
       lit(new java.math.BigDecimal(100 - dNum).movePointLeft(2)).cast(RankType)

@@ -25,18 +25,12 @@ object Keywords {
   /** Rational IDF score: `tf * n_docs / df`, computed as an exact
     * integer product with one double division, Det-rounded — every
     * engine produces the same cell. Monotone in the same direction
-    * as log-IDF for fixed tf ([[logTfIdf]] is the conventional
-    * variant; its `ln` is libm-dependent, so the ORACLE-checked
-    * surface uses this exact-rational form).
+    * as log-IDF for fixed tf (the conventional `tf * ln(n_docs / df)`
+    * is libm-dependent, so the ORACLE-checked surface uses this
+    * exact-rational form).
     */
   private def rationalScore(tf: Column, nDocs: Column, df: Column): Column =
     Det.round((tf * nDocs).cast("double") / df, 4)
-
-  /** Conventional `tf * ln(n_docs / df)` — for ranking use; not
-    * cross-engine-exact (ln differs by ULPs between libms).
-    */
-  def logTfIdf(tf: Column, nDocs: Column, df: Column): Column =
-    tf.cast("double") * log(nDocs.cast("double") / df.cast("double"))
 
   /** Top-`k` keywords per document by rational TF-IDF; ties broken
     * by token asc (fully deterministic output).
@@ -91,7 +85,6 @@ object Keywords {
     */
   def bigramLift(
       docs: DataFrame,
-      idCol: String,
       textCol: String,
       minCount: Long = 5L,
       k: Int = 50): DataFrame = {

@@ -29,10 +29,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical media envelope: `struct<bytes binary, mime string>`. */
-  def asMedia(content: Column, mime: Column): Column =
-    struct(content.as("bytes"), mime.as("mime"))
-
   /** STUB image decode for non-image payloads — deterministic fake
     * dimensions derived from the byte length, same shape as the real
     * decoder's output. Kept for payloads `javax.imageio` cannot read

@@ -599,19 +599,6 @@ object Similarity {
        |  WHERE rn <= $k)""".stripMargin
   }
 
-  /** Persist / load an IVF index (assignments + centroids) — the
-    * build is a one-off at scale; queries reuse the stored cells.
-    */
-  def saveIvfIndex(index: DataFrame, centroids: DataFrame, path: String): Unit = {
-    index.write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$path/assignments")
-    centroids.write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$path/centroids")
-  }
-
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/assignments"), spark.read.parquet(s"$path/centroids"))
-
   /** Nearest centroid per corpus vector (broadcast-scored). The
     * similarity is Det-rounded to 6 dp BEFORE the argmax so the
     * assignment — and everything downstream of the quantizer — is

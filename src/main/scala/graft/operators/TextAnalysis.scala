@@ -477,7 +477,7 @@ object TextAnalysis {
   //
   // The published web-corpus quality rules (Rae et al. 2021 §A1.1)
   // filter on how much of a document is self-repeated: duplicate
-  // lines, duplicate n-grams. All four measures below are pure
+  // lines, duplicate n-grams. The measures below are pure
   // per-row array arithmetic over exact integer counts — map-only,
   // codegen'd, engine-portable (the DuckDB oracle mirrors each
   // expression 1:1).
@@ -600,9 +600,6 @@ object TextAnalysis {
     Det.round(
       (size(arr) - size(array_distinct(arr))).cast("double") /
         greatest(size(arr), lit(1)), 4)
-
-  /** Fraction of lines that duplicate an earlier line. */
-  def dupLineFraction(text: Column): Column = repeatFraction(lines(text))
 
   /** Fraction of tokens that repeat an earlier token. */
   def dupTokenFraction(text: Column): Column = repeatFraction(tokens(text))

@@ -40,7 +40,7 @@ object RewriteTopOnePerGroup extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, w: Window) =>
       tryRewrite(cond, w).getOrElse(f)
-    case f @ Filter(cond, p @ Project(projectList, w: Window))
+    case f @ Filter(cond, Project(projectList, w: Window))
         if projectList.forall(_.isInstanceOf[AttributeReference]) =>
       // withColumn-style plans put a pass-through Project between
       // Filter and Window; keep it, rewrite beneath.

@@ -83,29 +83,4 @@ object Compact {
     fs.delete(old, true)
     Stats(before.size, bytes, leafFiles(fs, path).size, rows)
   }
-
-  /** [[compact]] plus an immediate manifest re-catalog — the one-call
-    * form of the "rebuild after any rewrite" contract, so there is no
-    * window where a [[Manifest]]-routed reader can consult the
-    * pre-compaction catalog (it would fail the staleness guard, but
-    * failing fast is still a failed query). Zone stats over `cols`,
-    * plus per-file blooms when `bloomCols` is non-empty.
-    */
-  def compactAndRecatalog(
-      spark: SparkSession,
-      dir: String,
-      manifestDir: String,
-      cols: Seq[String],
-      bloomCols: Seq[String] = Nil,
-      targetBytes: Long = 128L * 1024 * 1024,
-      sortBy: Seq[String] = Nil,
-      expectedPerFile: Long = 100000L): Stats = {
-    val stats = compact(spark, dir, targetBytes, sortBy)
-    val m =
-      if (bloomCols.nonEmpty)
-        Manifest.buildWithBlooms(spark, dir, cols, bloomCols, expectedPerFile)
-      else Manifest.build(spark, dir, cols)
-    m.coalesce(1).write.mode("overwrite").parquet(manifestDir)
-    stats
-  }
 }

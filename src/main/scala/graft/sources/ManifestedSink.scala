@@ -193,24 +193,6 @@ object ManifestedSink {
       next._2.iterator.map(rowBytes).sum)
   }
 
-  /** Snapshot-as-of read: the table as it stood after `maxBatchId`
-    * committed. Falls out of the design for free — data files are
-    * immutable once their batch commits and the manifest records the
-    * writing batch, so a snapshot is just the manifest rows with
-    * `batch_id <= maxBatchId` (the table-format time-travel feature,
-    * without the table format). Compaction invalidates history the
-    * same way it invalidates the manifest — snapshot reads are for
-    * the uncompacted ingest log.
-    */
-  def readAsOf(spark: SparkSession, manifestDir: String, maxBatchId: Long): DataFrame = {
-    val m = readManifest(spark, manifestDir).getOrElse(
-      throw new IllegalStateException(s"no manifest at $manifestDir — nothing committed"))
-    val files = m.filter(col("batch_id") <= maxBatchId)
-      .select("file").collect().map(_.getString(0))
-    require(files.nonEmpty, s"no batch <= $maxBatchId has committed at $manifestDir")
-    spark.read.parquet(files.toSeq: _*)
-  }
-
   /** Incremental (change-feed) read: only the rows ingested by
     * batches in `(sinceBatchId, untilBatchId]` — the downstream-
     * consumer surface the manifest's batch column provides for free.
@@ -219,8 +201,8 @@ object ManifestedSink {
     * full-table diff, no re-scan of history — then records the new
     * high batch id (read it off [[latestBatchId]]). Append-only
     * change feed: this sink never rewrites rows, so "changes" are
-    * inserts; compaction invalidates the feed exactly as it
-    * invalidates snapshots.
+    * inserts; compaction invalidates the feed, as it invalidates the
+    * manifest.
     *
     * Returns an empty (correctly-schemed) frame when no newer batch
     * has committed.
@@ -263,50 +245,6 @@ object ManifestedSink {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendBatch(batch, dir, manifestDir, cols, bloomCols, batchId)
-      }
-      .start()
-
-  /** [[sink]] with a per-batch quality gate — the streaming form of
-    * [[Wap]]: a micro-batch that violates any rule beyond
-    * `maxViolations` is diverted WHOLE to
-    * `rejectDir/batch_id=<id>` (idempotent partition overwrite, the
-    * same replay discipline as every dead-letter in the catalog) and
-    * never touches the table or its manifest; a clean batch appends
-    * under the usual manifest transaction. The audit is one bounded
-    * aggregate over the micro-batch — batches are small by
-    * construction, so a dedicated pass here costs what the
-    * [[graft.operators.Profile.observeExpectations]] zero-pass trick
-    * saves on full-corpus writes.
-    *
-    * Batch-grain rejection is the deliberate policy (not row-grain):
-    * a poisoned batch usually means an upstream fault, and shipping
-    * its "clean-looking" rows while quarantining the rest hides the
-    * fault from the operator who must replay it.
-    */
-  def auditedSink(
-      stream: DataFrame,
-      dir: String,
-      manifestDir: String,
-      cols: Seq[String],
-      bloomCols: Seq[String],
-      checkpoint: String,
-      rules: Seq[(String, org.apache.spark.sql.Column)],
-      rejectDir: String,
-      maxViolations: Long = 0L): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val audited = graft.operators.Materialize(batch)
-        val bad = graft.operators.Profile.checkExpectations(audited, rules)
-          .filter(col("n_violations") > maxViolations)
-          .limit(1).count() > 0
-        if (bad)
-          audited.withColumn("batch_id", lit(batchId))
-            .write.partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(rejectDir)
-        else
-          appendBatch(audited, dir, manifestDir, cols, bloomCols, batchId)
       }
       .start()
 }

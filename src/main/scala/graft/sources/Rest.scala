@@ -7,8 +7,7 @@ import java.nio.file.{Files, Paths}
 import java.time.Duration
 import java.util.Base64
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** REST source with the reference's OAuth2 client-credentials flow
   * (SURVEY §2 S1; `DataGathering.py:5-39`): fetch a bearer token with
@@ -18,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: a snapshot endpoint is ONE url — that fetch is
   * inherently driver-side and tiny (the reference's payload is a few
-  * hundred KB), so [[fetchSnapshot]] runs on the driver and hands the
-  * body to the distributed JSON reader. When the API pages, the fetch
+  * hundred KB), so [[fetchSnapshot]] runs on the driver and returns the
+  * body for the distributed JSON reader. When the API pages, the fetch
   * itself distributes: [[fetchPaged]] ships page numbers to executors
   * and opens one HTTP client per partition (`mapPartitions`), so a
   * 1000-executor cluster pulls 1000 pages concurrently — the
@@ -111,24 +110,11 @@ object Rest {
         ++ cfg.extraHeaders)
   }
 
-  /** Snapshot → DataFrame: distributed JSON parse of the fetched body
-    * (one JSON document per line or a single document; Spark's reader
-    * handles both with `multiLine` off/on respectively).
-    */
-  def snapshotDf(
-      spark: SparkSession,
-      url: String,
-      cfg: OAuth2Config,
-      multiLine: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val body = fetchSnapshot(url, cfg)
-    spark.read.option("multiLine", multiLine.toString).json(Seq(body).toDS())
-  }
-
   /** Append one fetched snapshot to a landing directory as a
     * timestamp-named JSONL file — the bridge from the REST source to
-    * the engine's file-stream ingest (`FuelPipeline` watches the
-    * directory): each periodic fetch becomes exactly one atomic file,
+    * the engine's file-stream ingest (read with `apiEnvelopeSchema`,
+    * flattened by `FuelCleaning.explodePrices`/`explodeStations`):
+    * each periodic fetch becomes exactly one atomic file,
     * which is the file source's unit of exactly-once.
     */
   def snapshotToLanding(
@@ -172,15 +158,4 @@ object Rest {
         it.map(p => get(client, s"$baseUrl$sep$pageParam=$p", headers))
       }
   }
-
-  /** Paged fetch → DataFrame: parse each page body as one JSON doc. */
-  def pagedDf(
-      spark: SparkSession,
-      baseUrl: String,
-      cfg: OAuth2Config,
-      pages: Range,
-      pageParam: String = "page",
-      partitions: Int = 8): DataFrame =
-    spark.read.option("multiLine", "true")
-      .json(fetchPaged(spark, baseUrl, cfg, pages, pageParam, partitions))
 }

@@ -24,14 +24,6 @@ object Warehouse {
   def append(df: DataFrame, path: String): Unit =
     df.write.mode("append").option("compression", "zstd").parquet(path)
 
-  /** Partitioned append — the 100 TB shape: facts land partitioned by
-    * a low-cardinality natural pruning key (event date for streams),
-    * so every retention/range query prunes partitions at plan time
-    * instead of scanning history.
-    */
-  def appendPartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
-
   /** Bucketed managed table: pre-hash-partitioned (and optionally
     * sorted) on the join/group key, so repeated joins and
     * aggregations on that key run with NO exchange — each bucket
@@ -169,17 +161,6 @@ object Warehouse {
       .select(col(idCol) +: df.columns.map(col): _*) // id first, like the DDL
   }
 
-  /** ORC twin of the parquet sinks — the other columnar format Spark
-    * carries natively (predicate pushdown, column pruning, zstd all
-    * apply; same writer disciplines as parquet). Parquet stays the
-    * default; ORC serves warehouses standardized on it.
-    */
-  def overwriteOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "zstd").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   /** CSV ingest with DEAD-LETTER routing — the file-drop sibling of
     * the reference's per-row presence/null rejection
     * (`DataCleaning.py:64-117`, P2/P3): PERMISSIVE parse keeps every
@@ -212,54 +193,6 @@ object Warehouse {
     val rejects = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"))
     (clean, rejects)
-  }
-
-  /** XML ingest with DEAD-LETTER routing — the XML sibling of
-    * [[readCsvWithRejects]], on Spark 4's built-in `xml` source:
-    * PERMISSIVE parse keeps every `<rowTag>` record, malformed ones
-    * (uncastable cells, broken nesting inside the record) land whole
-    * in the corrupt column, and the split returns
-    * `(clean rows, rejected raw records)`. Same one-materialization
-    * discipline: the parser must not re-run per filter, and one cut
-    * serves both halves.
-    */
-  def readXmlWithRejects(
-      spark: SparkSession,
-      path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rowTag: String): (DataFrame, DataFrame) = {
-    require(!schema.fieldNames.contains("_corrupt_record"),
-      "readXmlWithRejects: schema must not already contain _corrupt_record")
-    val withCorrupt = schema.add("_corrupt_record",
-      org.apache.spark.sql.types.StringType)
-    val raw = graft.operators.Materialize(spark.read
-      .option("rowTag", rowTag)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(withCorrupt)
-      .xml(path))
-    val clean = raw.filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
-    val rejects = raw.filter(col("_corrupt_record").isNotNull)
-      .select(col("_corrupt_record").as("raw_record"))
-    (clean, rejects)
-  }
-
-  /** XML export (one `<row>` element per record under `<rows>`) —
-    * the write half of the `xml` format pair. Flat columns only, the
-    * same up-front complex-type rejection as [[exportCsv]]: nested
-    * XML spellings are schema-design decisions, not defaults.
-    */
-  def exportXml(df: DataFrame, path: String): Unit = {
-    val complex = df.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] ||
-        f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] => f.name
-    }
-    require(complex.isEmpty,
-      s"flat XML export — serialize or drop complex columns first: ${complex.mkString(", ")}")
-    df.write.mode("overwrite")
-      .option("rootTag", "rows").option("rowTag", "row").xml(path)
   }
 
   /** S10 — content-based router: the reference dispatches each
@@ -382,41 +315,6 @@ object Warehouse {
       case None =>
         spark.read.jdbc(url, table, jdbcProps(driver))
     }
-
-  // ---- Interchange exports ----
-  //
-  // Parquet is the warehouse format; these are the hand-off formats
-  // for systems that can't read it (the reference publishes JSON to
-  // its dashboard and broker — `DataAnalysis.py:23,29`). Both write
-  // distributed (one file per partition — coalesce at the CALL SITE
-  // if a single file matters more than parallel write throughput)
-  // and declare their lossiness explicitly rather than hiding it.
-
-  /** JSONL export (one JSON object per line — the streaming-friendly
-    * interchange the reference's topics carry). Round-trips all
-    * nested types; timestamps serialize ISO-8601.
-    */
-  def exportJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "none").json(path)
-
-  /** CSV export with header. CSV is FLAT: arrays/structs/maps are
-    * rejected up front (their CSV spelling would be engine-specific
-    * mush) — project or serialize them first. Quoting/escaping is
-    * RFC-4180-shaped; nulls write as empty fields (and read back
-    * indistinguishable from empty strings — CSV's lossiness, not
-    * ours), and embedded newlines are quoted — readers must set
-    * `multiLine=true` to reassemble them.
-    */
-  def exportCsv(df: DataFrame, path: String): Unit = {
-    val complex = df.schema.fields.filter(f =>
-      f.dataType.typeName match {
-        case "array" | "struct" | "map" => true
-        case _ => false
-      }).map(_.name)
-    require(complex.isEmpty,
-      s"CSV is flat — serialize or drop complex columns first: ${complex.mkString(", ")}")
-    df.write.mode("overwrite").option("header", "true").csv(path)
-  }
 }
 
 /** Per-partition exclusive prefix offset for [[Warehouse.withDenseId]]. */

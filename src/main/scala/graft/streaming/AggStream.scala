@@ -332,23 +332,6 @@ object AggStream {
       .select(groupCols.map(col) ++ all.map(c => col(s"__l.$c")): _*)
   }
 
-  /** Streaming top-k serving: the exact leaderboard off the partials
-    * table — merge ([[serve]]) then cut with
-    * [[graft.operators.Relational.topK]] (TakeOrderedAndProject:
-    * per-partition size-k heaps, k-row driver merge — no global
-    * sort). "Top users by live spend" without ever re-scanning
-    * history, and exact, unlike a sketch leaderboard. Ties break by
-    * the group key ascending.
-    */
-  def serveTopK(
-      spark: SparkSession,
-      stateDir: String,
-      groupCols: Seq[String],
-      k: Int): DataFrame =
-    graft.operators.Relational.topK(
-      serve(spark, stateDir, groupCols), k,
-      col("sum_value").desc +: groupCols.map(c => col(c).asc): _*)
-
   /** The streaming maintenance query: every micro-batch commits its
     * group partials through [[appendPartials]].
     */

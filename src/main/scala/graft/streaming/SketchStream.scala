@@ -107,19 +107,4 @@ object SketchStream {
       spark.read.parquet(stateDir)
         .select((groupCols.map(col) :+ col("bucket") :+ col("register")): _*),
       groupCols)
-
-  /** The streaming portable-register maintenance query. */
-  def streamPortable(
-      rows: DataFrame,
-      stateDir: String,
-      checkpointDir: String,
-      groupCols: Seq[String],
-      keyCol: String,
-      p: Int = 12): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        appendPortable(b, id, stateDir, groupCols, col(keyCol), p)
-      }
-      .start()
 }

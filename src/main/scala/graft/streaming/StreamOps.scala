@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.fuel.FuelModel.PriceRecord
 
@@ -45,29 +45,12 @@ object StreamOps {
     */
   def hwmGate(prices: Dataset[PriceRecord]): Dataset[PriceRecord] = {
     import prices.sparkSession.implicits._
-    hwmGateBy(prices, p => (p.stationcode, p.fueltype))
-  }
-
-  /** The reference-exact GLOBAL high-water-mark (one mark for the
-    * whole stream, `main.py:45-51`) — inherently sequential, so this
-    * parity-only variant funnels through a single state key; use
-    * [[hwmGate]] (per-key marks) for anything that must scale.
-    */
-  def hwmGateGlobal(prices: Dataset[PriceRecord]): Dataset[PriceRecord] = {
-    import prices.sparkSession.implicits._
-    hwmGateBy(prices, _ => 0)
-  }
-
-  // One high-water mark per `key`: per micro-batch, sort by (event
-  // time, seq) like the reference's asc-sorted publish loop, emit
-  // strictly-newer, advance the mark.
-  private def hwmGateBy[K: org.apache.spark.sql.Encoder](
-      prices: Dataset[PriceRecord], key: PriceRecord => K): Dataset[PriceRecord] = {
-    import prices.sparkSession.implicits._
+    // Per micro-batch, sort by (event time, seq) like the reference's
+    // asc-sorted publish loop, emit strictly-newer, advance the mark.
     prices
-      .groupByKey(key)
+      .groupByKey(p => (p.stationcode, p.fueltype))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: K, rows: Iterator[PriceRecord], state: GroupState[Timestamp]) => {
+        (_: (String, String), rows: Iterator[PriceRecord], state: GroupState[Timestamp]) => {
           val hwm = state.getOption
           val sorted = rows.toSeq.sortBy(p => (p.lastupdated.getTime, p.seq))
           val emitted = sorted.iterator.scanLeft((hwm, Option.empty[PriceRecord])) {
@@ -92,14 +75,6 @@ object StreamOps {
     if (withinWatermark) stations.dropDuplicatesWithinWatermark(keys)
     else stations.dropDuplicates(keys)
 
-  /** St3 — retention window (`DataCleaning.py:15-39`): anchored at
-    * max *observed* event time, applied per micro-batch (the
-    * reference recomputes the anchor per fetched snapshot — same
-    * granularity).
-    */
-  def retentionPerBatch(batch: DataFrame, tsCol: String, days: Int): DataFrame =
-    graft.operators.Relational.retentionFilter(batch, tsCol, days)
-
   /** St5 — periodic re-evaluation (`DataAnalysis.py:59-63`): run any
     * aggregation query in complete mode against an in-memory sink the
     * dashboard reads — Spark's incremental aggregation replaces the
@@ -115,18 +90,6 @@ object StreamOps {
       .queryName(name)
       .trigger(Trigger.ProcessingTime(intervalMs))
       .start()
-
-  /** Streaming latest-per-group (A3): `max_by` aggregation in update/
-    * complete mode — `dropDuplicates` can't express *latest*
-    * (SURVEY §2 A3 note), an aggregation can.
-    */
-  def latestPricesStream(prices: DataFrame): DataFrame =
-    prices.groupBy("stationcode", "fueltype")
-      .agg(max_by(
-        struct(col("price"), col("lastupdated")),
-        struct(col("lastupdated"), col("seq"))).as("latest"))
-      .select(col("stationcode"), col("fueltype"),
-        col("latest.price"), col("latest.lastupdated"))
 
   /** Event-time windowed aggregation with watermark eviction — the
     * bounded-state form of the reference's unbounded running
@@ -190,12 +153,4 @@ object StreamOps {
       && col(rightTs) >= col(leftTs) - expr(s"INTERVAL $maxDelay")
       && col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxDelay"))
   }
-
-  /** Fan-out helper — two independent sinks over one source stream
-    * (SURVEY §2 S7: warehouse consumer + dashboard consumer).
-    */
-  def fanOut(df: DataFrame)(
-      f: DataFrame => DataStreamWriter[org.apache.spark.sql.Row],
-      g: DataFrame => DataStreamWriter[org.apache.spark.sql.Row]): Seq[StreamingQuery] =
-    Seq(f(df).start(), g(df).start())
 }

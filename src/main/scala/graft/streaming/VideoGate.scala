@@ -115,8 +115,8 @@ object VideoGate {
       bands: Int,
       threshold: Double,
       exact: Boolean,
-      starIntra: Boolean = false,
-      autoStarPairsCap: Long = SigGate.defaultAutoStarPairsCap): DataFrame = {
+      starIntra: Boolean,
+      autoStarPairsCap: Long): DataFrame = {
     val rows = n / bands
     // Payloads too short for one frame still need a signature (the
     // state schema is fixed): the empty element set signs as [0],

@@ -133,25 +133,6 @@ class AggStreamSpec extends SparkSpecBase {
     }
   }
 
-  test("serveTopK: exact leaderboard off the partials, ranked by merged sum") {
-    val stateDir = java.nio.file.Files.createTempDirectory("agg_topk").toString
-    AggStream.appendPartials(rows.take(3000).toDF("grp", "v"), 0L,
-      stateDir, Seq("grp"), "v")
-    AggStream.appendPartials(rows.drop(3000).toDF("grp", "v"), 1L,
-      stateDir, Seq("grp"), "v")
-    val top = AggStream.serveTopK(spark, stateDir, Seq("grp"), k = 2)
-      .select(col("grp"), col("sum_value").cast("double"))
-      .collect().map(r => (r.getString(0), r.getDouble(1)))
-    assert(top.length === 2)
-    assert(top(0)._2 >= top(1)._2)
-    // agrees with the full serve under the same total order (groups
-    // can tie on the sum — grp asc is the declared tiebreak)
-    val full = AggStream.serve(spark, stateDir, Seq("grp"))
-      .orderBy(col("sum_value").desc, col("grp").asc).limit(2)
-      .collect().map(_.getString(0)).toSeq
-    assert(top.map(_._1).toSeq === full)
-  }
-
   test("replayed batch id overwrites its own partition; state is partials-sized") {
     val stateDir = java.nio.file.Files.createTempDirectory("agg_replay").toString
     val df0 = rows.take(3000).toDF("grp", "v")

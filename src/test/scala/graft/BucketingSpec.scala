@@ -34,21 +34,6 @@ class BucketingSpec extends SparkSpecBase {
     }
   }
 
-  test("partitioned table: partition filter prunes at plan time") {
-    val sf = "/root/testdata/sf0.001"
-    val path = "/tmp/graft-warehouse/part_events"
-    Warehouse.appendPartitioned(
-      Tables.events(spark, sf).withColumn("day", to_date(col("ts"))),
-      path, Seq("day"))
-    val q = spark.read.parquet(path).filter(col("day") === "2024-01-05")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("day"), plan.take(800))
-    assert(q.count() > 0)
-    // prune actually reduces the scanned partitions
-    val all = spark.read.parquet(path).count()
-    assert(q.count() < all)
-  }
-
   test("writeBucketed: overwrites an orphaned managed location from a previous process") {
     val sf = "/root/testdata/sf0.001"
     spark.sql("DROP TABLE IF EXISTS bkt_orphan")

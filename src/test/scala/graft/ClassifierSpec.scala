@@ -191,12 +191,6 @@ class ClassifierSpec extends SparkSpecBase {
     assert(fin4.forall(_ === 0L), "T=4 lands on the cycle's zero vector")
     assert(accuracy(avg4) === 6)
     assert(accuracy(avg4) > accuracy(fin4))
-    // OvR sibling: the 2-class averaged vectors are the binary summed
-    // trajectory and its mirror (labels y / not-y)
-    val ovrAvg = Classifier.perceptronTrainOvrAvg(
-      docs.withColumn("cls", when(col("y"), "t").otherwise("f")),
-      "text", "cls", Seq("t", "f"), dim, 4)
-    assert(ovrAvg.head.toSeq === avg4.toSeq)
   }
 
   test("perceptronPredictOvr featurizes ONCE — the K-class scoring binds a lambda variable, not K re-inlined tokenize subtrees") {

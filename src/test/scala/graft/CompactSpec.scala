@@ -55,15 +55,12 @@ class CompactSpec extends SparkSpecBase {
     assert(spark.read.parquet(dir).columns.toSeq === Seq("id", "key", "payload"))
   }
 
-  test("compactAndRecatalog: pruned reads work immediately after the rewrite") {
+  test("compact then a manifest rebuild: pruned reads work right after the rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("cmp").toString
-    val mdir = java.nio.file.Files.createTempDirectory("cmp_meta").toString
     (0L until 4096L).map(i => (i, s"v$i")).toDF("k", "v")
       .repartition(16).write.mode("overwrite").parquet(dir)
-    Compact.compactAndRecatalog(spark, dir, mdir,
-      cols = Seq("k"), bloomCols = Seq("k"),
-      targetBytes = 64L * 1024, sortBy = Seq("k"), expectedPerFile = 4096L)
-    val m = spark.read.parquet(mdir)
+    Compact.compact(spark, dir, targetBytes = 64L * 1024, sortBy = Seq("k"))
+    val m = graft.sources.Manifest.buildWithBlooms(spark, dir, Seq("k"), Seq("k"), 4096L)
     // no staleness window: the fresh catalog matches the rewritten dir
     import org.apache.spark.sql.functions.{col, input_file_name}
     val hit = graft.sources.Manifest.prunedReadEq(spark, m, Map("k" -> 99L))

@@ -1,31 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Warehouse
 
-/** File-format surfaces beyond parquet: ORC round-trip with pushdown,
-  * and CSV ingest with dead-letter routing of malformed lines.
-  */
+/** CSV ingest with dead-letter routing of malformed lines. */
 class FormatsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  test("ORC round-trip preserves schema and rows; filters push to the scan") {
-    val path = tmp("orc") + "/t"
-    val df = (1L to 100L).map(i => (i, s"name$i", i * 1.5)).toDF("id", "name", "v")
-    Warehouse.overwriteOrc(df, path)
-    val back = Warehouse.readOrc(spark, path)
-    assert(back.schema.fieldNames.toSeq === Seq("id", "name", "v"))
-    assert(back.count() === 100L)
-    val filtered = back.filter(col("id") === 7L)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("id"), plan.take(500))
-    assert(filtered.select("name").as[String].head() === "name7")
-  }
 
   test("CSV dead-letter: malformed lines route whole to rejects, clean rows parse") {
     val dir = tmp("csv")
@@ -58,49 +42,5 @@ class FormatsSpec extends SparkSpecBase {
       StructField("qty", IntegerType)))
     val (clean, rejects) = Warehouse.readCsvWithRejects(spark, dir, schema)
     assert(clean.count() === 2L && rejects.count() === 0L)
-  }
-
-  test("XML dead-letter: malformed records route whole to rejects, clean rows parse") {
-    val dir = tmp("xml")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/data.xml"),
-      """<rows>
-        |<row><id>1</id><name>a</name><qty>2</qty></row>
-        |<row><id>notanumber</id><name>b</name><qty>9</qty></row>
-        |<row><id>3</id><name>c</name><qty>4</qty></row>
-        |</rows>""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("name", StringType),
-      StructField("qty", IntegerType)))
-    val (clean, rejects) =
-      Warehouse.readXmlWithRejects(spark, dir, schema, rowTag = "row")
-    assert(clean.select("id").as[Long].collect().toSet === Set(1L, 3L))
-    val bad = rejects.select("raw_record").as[String].collect()
-    assert(bad.length === 1 && bad.head.contains("notanumber"),
-      s"the malformed record must survive verbatim for replay: ${bad.mkString}")
-  }
-
-  test("XML round-trip: exportXml then readXmlWithRejects is lossless for flat rows") {
-    val dir = tmp("xmlrt") + "/t"
-    val df = Seq((1L, "a", 2), (2L, "b", 3), (3L, "c", 4)).toDF("id", "name", "qty")
-    Warehouse.exportXml(df, dir)
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("name", StringType),
-      StructField("qty", IntegerType)))
-    val (clean, rejects) =
-      Warehouse.readXmlWithRejects(spark, dir, schema, rowTag = "row")
-    assert(rejects.count() === 0L)
-    assert(clean.orderBy("id").collect().map(_.toSeq).toSeq ===
-      df.orderBy("id").collect().map(_.toSeq).toSeq)
-  }
-
-  test("XML export rejects complex columns up front") {
-    val df = Seq((1L, Seq("x", "y"))).toDF("id", "tags")
-    val e = intercept[IllegalArgumentException] {
-      Warehouse.exportXml(df, tmp("xmlbad") + "/t")
-    }
-    assert(e.getMessage.contains("tags"))
   }
 }

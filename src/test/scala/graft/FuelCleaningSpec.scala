@@ -151,4 +151,32 @@ class FuelCleaningSpec extends SparkSpecBase {
     val sr = s.collect().head
     assert(sr.getAs[Double]("location_latitude") === -33.5)
   }
+
+  test("envelope streams: raw API snapshots explode and clean in-stream") {
+    val dir = java.nio.file.Files.createTempDirectory("env").toFile
+    val json = """{"stations":[{"brandid":"","stationid":"","brand":"United",
+      "code":"972","name":"N","address":"A",
+      "location":{"latitude":-33.5,"longitude":151.3}}],
+      "prices":[{"stationcode":"972","fueltype":"U91","price":181.5,
+      "lastupdated":"05/10/2023 08:19:59"},
+      {"stationcode":"972","fueltype":"E10","price":0.0,
+      "lastupdated":"05/10/2023 09:00:00"}]}""".replaceAll("\n\\s*", "")
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "snap1.json").toPath, json)
+    val raw = spark.readStream.schema(FuelModel.apiEnvelopeSchema).json(dir.toString)
+    val q = FuelCleaning.cleanPrices(FuelCleaning.explodePrices(raw)).valid.writeStream
+      .format("memory").queryName("env_prices").outputMode("append").start()
+    val q2 = FuelCleaning.cleanStations(FuelCleaning.explodeStations(raw)).valid.writeStream
+      .format("memory").queryName("env_stations").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      q2.processAllAvailable()
+      val p = spark.table("env_prices").collect()
+      assert(p.length === 1) // zero-price record dropped in-stream
+      assert(p.head.getAs[Double]("price") === 181.5)
+      val st = spark.table("env_stations").collect()
+      assert(st.length === 1)
+      assert(st.head.getAs[String]("brandid") === "United") // default-filled
+    } finally { q.stop(); q2.stop() }
+  }
 }

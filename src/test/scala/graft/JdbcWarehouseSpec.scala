@@ -60,38 +60,4 @@ class JdbcWarehouseSpec extends SparkSpecBase {
     Warehouse.appendJdbc(wide, url, "prices_conn", driver, maxConnections = 2)
     assert(Warehouse.readJdbc(spark, url, "prices_conn", driver).count() === 32)
   }
-
-  test("exportJsonl/exportCsv: lossless flat round-trip; CSV rejects complex columns") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val df = Seq(
-      (1L, "plain", Some(1.5)),
-      (2L, "comma, quote \" and\nnewline", None),
-      (3L, "", Some(-0.25)))
-      .toDF("id", "s", "v")
-    val jdir = java.nio.file.Files.createTempDirectory("wh_jsonl").toString
-    Warehouse.exportJsonl(df, jdir)
-    val jback = spark.read.json(jdir)
-      .select(col("id"), col("s"), col("v"))
-    // JSON drops empty-string? no — but null v rows omit the field;
-    // schema union still reads it as null
-    assert(jback.collect().map(r =>
-        (r.getLong(0), r.getString(1), Option(r.get(2)))).toSet ===
-      df.collect().map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).toSet)
-
-    val cdir = java.nio.file.Files.createTempDirectory("wh_csv").toString
-    Warehouse.exportCsv(df, cdir)
-    val cback = spark.read.option("header", "true")
-      .option("multiLine", "true") // embedded newlines are quoted; readers must opt in
-      .schema(df.schema).csv(cdir)
-    // CSV cannot distinguish "" from null — both read back null; the
-    // quoted/newlined value survives exactly
-    assert(cback.filter(col("id") === 2L).head.getString(1)
-      === "comma, quote \" and\nnewline")
-    assert(cback.count() === 3L)
-
-    intercept[IllegalArgumentException] {
-      Warehouse.exportCsv(df.withColumn("arr", array(lit(1))), "/tmp/never")
-    }
-  }
 }

@@ -76,20 +76,6 @@ class ManifestedSinkSpec extends SparkSpecBase {
     assert(m.get.agg(sum("n_rows")).head.getLong(0) === 32L)
   }
 
-  test("readAsOf: batch-snapshot time travel off the commit log") {
-    val dir = tmp("msink_data"); val mdir = tmp("msink_meta")
-    ManifestedSink.appendBatch(batchDf(0, 32), dir, mdir, Seq("k"), Seq("k"), 0L)
-    ManifestedSink.appendBatch(batchDf(32, 64), dir, mdir, Seq("k"), Seq("k"), 1L)
-    ManifestedSink.appendBatch(batchDf(64, 96), dir, mdir, Seq("k"), Seq("k"), 2L)
-    assert(ManifestedSink.readAsOf(spark, mdir, 0L)
-      .select("k").as[Long].collect().toSet === (0L until 32L).toSet)
-    assert(ManifestedSink.readAsOf(spark, mdir, 1L).count() === 64L)
-    assert(ManifestedSink.readAsOf(spark, mdir, 99L).count() === 96L)
-    intercept[IllegalArgumentException] {
-      ManifestedSink.readAsOf(spark, mdir, -1L)
-    }
-  }
-
   test("readChangesSince: incremental consumption touches only new batches") {
     val dir = tmp("msink_cdf"); val mdir = tmp("msink_cdf_meta")
     ManifestedSink.appendBatch(batchDf(0, 32), dir, mdir, Seq("k"), Seq("k"), 0L)
@@ -223,35 +209,5 @@ class ManifestedSinkSpec extends SparkSpecBase {
     assert(m.select("batch_id").distinct().count() === 2L)
     // pruning is live immediately after ingest — no rebuild step
     assert(Manifest.prunedReadEq(spark, m, Map("k" -> 5L)).count() === 1L)
-  }
-
-  test("auditedSink: a poisoned micro-batch diverts whole to rejects, clean ones commit") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = tmp("wsink_data"); val mdir = tmp("wsink_meta")
-    val ckpt = tmp("wsink_ckpt"); val rej = tmp("wsink_rej")
-    val input = MemoryStream[(Long, Double)](spark)
-    val q = ManifestedSink.auditedSink(
-      input.toDF().toDF("k", "v"), dir, mdir, Seq("k"), Seq("k"), ckpt,
-      rules = Seq("v_positive" -> (col("v") > 0)),
-      rejectDir = rej)
-    try {
-      input.addData((0L until 8L).map(i => (i, 1.0)))       // clean
-      q.processAllAvailable()
-      input.addData(Seq((8L, 2.0), (9L, -1.0)))             // poisoned
-      q.processAllAvailable()
-      input.addData((10L until 14L).map(i => (i, 3.0)))     // clean again
-      q.processAllAvailable()
-    } finally q.stop()
-    // table holds ONLY the clean batches; the manifest agrees
-    val table = spark.read.parquet(dir)
-    assert(table.count() === 12L)
-    assert(table.filter(col("v") <= 0).count() === 0L)
-    val m = ManifestedSink.readManifest(spark, mdir).get
-    assert(m.agg(sum("n_rows")).head.getLong(0) === 12L)
-    // the poisoned batch survives WHOLE in the reject dir — including
-    // its clean-looking rows (batch-grain quarantine for replay)
-    val rejected = spark.read.parquet(rej)
-    assert(rejected.count() === 2L)
-    assert(rejected.select("k").as[Long].collect().toSet === Set(8L, 9L))
   }
 }

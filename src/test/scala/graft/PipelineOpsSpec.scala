@@ -32,13 +32,10 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(one[Double](TextAnalysis.dupNgramFraction(toks, 2), "a b a b a b") === 0.6)
   }
 
-  test("dup line fraction and dedupLines keep first occurrence order") {
+  test("dedupLines keeps first occurrence order") {
     val txt = "nav bar\nbody one\nnav bar\nbody two\nnav bar"
-    assert(one[Double](TextAnalysis.dupLineFraction(col("text")), txt) === 0.4)
     assert(one[String](TextAnalysis.dedupLines(col("text")), txt) ===
       "nav bar\nbody one\nbody two")
-    // blank lines don't count toward the line set
-    assert(one[Double](TextAnalysis.dupLineFraction(col("text")), "a\n\n  \na") === 0.5)
   }
 
   test("qualityGate: rules fire independently and compose into pass") {
@@ -284,21 +281,21 @@ class PipelineOpsSpec extends SparkSpecBase {
       (3L, "b c"))
       .toDF("doc_id", "text")
     def det4(x: Double) = math.floor(x * 1e4 + 0.5) / 1e4
-    val cut = Keywords.bigramLift(docs, "doc_id", "text", minCount = 2L, k = 10)
+    val cut = Keywords.bigramLift(docs, "text", minCount = 2L, k = 10)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     // only "a b" clears minCount 2
     assert(cut.keySet === Set("a b"))
     assert(cut("a b") === ((2L, 3L, 3L, det4(((2.0 * 8) * 8) / ((5.0 * 3) * 3)))))
     // at minCount 1 the halved-frequency "b a" scores exactly half
-    val all = Keywords.bigramLift(docs, "doc_id", "text", minCount = 1L, k = 10)
+    val all = Keywords.bigramLift(docs, "text", minCount = 1L, k = 10)
       .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
     assert(all("b a") === det4(((1.0 * 8) * 8) / ((5.0 * 3) * 3)))
     assert(all("a b") > all("b a")) // frequency separates same-vocab pairs
     // k cuts on (lift desc, bigram asc): rarer-vocab pairs score highest
     // (a c / b c: 1*64/(5*3*2) = 2.1333) and outrank "a b" (1.4222*2=2.84
     // vs... 2*64/45=2.8444) — order check: a b first, then a c, b c, b a
-    val ranked = Keywords.bigramLift(docs, "doc_id", "text", minCount = 1L, k = 3)
+    val ranked = Keywords.bigramLift(docs, "text", minCount = 1L, k = 3)
       .collect().map(_.getString(0)).toSeq
     assert(ranked === Seq("a b", "a c", "b c"))
   }

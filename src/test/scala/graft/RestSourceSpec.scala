@@ -106,8 +106,10 @@ class RestSourceSpec extends SparkSpecBase with BeforeAndAfterAll {
   }
 
   test("snapshot -> DataFrame through the distributed JSON reader") {
-    val df = Rest.snapshotDf(spark, s"$base/fuel/prices", cfg)
+    import spark.implicits._
     import org.apache.spark.sql.functions._
+    val body = Rest.fetchSnapshot(s"$base/fuel/prices", cfg)
+    val df = spark.read.option("multiLine", "true").json(Seq(body).toDS())
     val rows = df.select(explode(col("prices")).as("p"))
       .select("p.stationcode", "p.fueltype", "p.price")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
@@ -128,7 +130,7 @@ class RestSourceSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(ds.rdd.getNumPartitions === 3)
     val bodies = ds.collect()
     assert(bodies.length === 6)
-    val codes = Rest.pagedDf(spark, s"$base/fuel/prices", cfg, 1 to 6, partitions = 3)
+    val codes = spark.read.option("multiLine", "true").json(ds)
       .selectExpr("explode(prices) AS p").select("p.stationcode")
       .collect().map(_.getString(0)).toSet
     assert(codes === (1 to 6).map(p => s"P$p").toSet)

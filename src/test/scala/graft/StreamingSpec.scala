@@ -61,22 +61,6 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("St1 hwmGateGlobal: ONE mark across all keys (reference-exact semantics)") {
-    val input = MemoryStream[PriceRecord](spark)
-    val gated = StreamOps.hwmGateGlobal(input.toDS())
-    val q = gated.writeStream
-      .format("memory").queryName("hwm_global").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(pr("A", "U91", 1.0, "2023-10-05 10:00:00", 1))
-      q.processAllAvailable()
-      // different key but older than the GLOBAL mark → dropped
-      input.addData(pr("B", "U91", 2.0, "2023-10-05 09:00:00", 2))
-      q.processAllAvailable()
-      val got = spark.table("hwm_global").collect().map(_.getAs[Double]("price")).toSet
-      assert(got === Set(1.0))
-    } finally q.stop()
-  }
-
   test("St2 firstWins: each station code emitted at most once across batches") {
     val input = MemoryStream[(String, String)](spark)
     val deduped = StreamOps.firstWins(input.toDF().toDF("code", "name"), Seq("code"))
@@ -317,52 +301,5 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
     // batch 1 enriched against v1, batch 2 against the UPDATED dim
     assert(seen.toSet === Set((10L, "v1"), (20L, "v2")))
-  }
-
-  test("envelope streams: raw API snapshots explode and clean in-stream") {
-    val dir = java.nio.file.Files.createTempDirectory("env").toFile
-    val json = """{"stations":[{"brandid":"","stationid":"","brand":"United",
-      "code":"972","name":"N","address":"A",
-      "location":{"latitude":-33.5,"longitude":151.3}}],
-      "prices":[{"stationcode":"972","fueltype":"U91","price":181.5,
-      "lastupdated":"05/10/2023 08:19:59"},
-      {"stationcode":"972","fueltype":"E10","price":0.0,
-      "lastupdated":"05/10/2023 09:00:00"}]}""".replaceAll("\n\\s*", "")
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "snap1.json").toPath, json)
-    val (pricesRaw, stationsRaw) = graft.fuel.FuelPipeline.envelopeStreams(spark, dir.toString)
-    val clean = graft.fuel.FuelCleaning.cleanPrices(pricesRaw)
-    val q = clean.valid.writeStream
-      .format("memory").queryName("env_prices").outputMode(OutputMode.Append).start()
-    val q2 = graft.fuel.FuelCleaning.cleanStations(stationsRaw).valid.writeStream
-      .format("memory").queryName("env_stations").outputMode(OutputMode.Append).start()
-    try {
-      q.processAllAvailable()
-      q2.processAllAvailable()
-      val p = spark.table("env_prices").collect()
-      assert(p.length === 1) // zero-price record dropped in-stream
-      assert(p.head.getAs[Double]("price") === 181.5)
-      val st = spark.table("env_stations").collect()
-      assert(st.length === 1)
-      assert(st.head.getAs[String]("brandid") === "United") // default-filled
-    } finally { q.stop(); q2.stop() }
-  }
-
-  test("streaming latest-per-group (A3) tracks the newest record per key") {
-    val input = MemoryStream[PriceRecord](spark)
-    val latest = StreamOps.latestPricesStream(input.toDF())
-    val q = latest.writeStream
-      .format("memory").queryName("latest_live").outputMode(OutputMode.Complete).start()
-    try {
-      input.addData(
-        pr("A", "U91", 100.0, "2023-10-05 10:00:00", 1),
-        pr("A", "U91", 120.0, "2023-10-05 12:00:00", 2))
-      q.processAllAvailable()
-      input.addData(pr("A", "U91", 110.0, "2023-10-05 11:00:00", 3)) // older → ignored
-      q.processAllAvailable()
-      val got = spark.table("latest_live").collect()
-      assert(got.length === 1)
-      assert(got.head.getAs[Double]("price") === 120.0)
-    } finally q.stop()
   }
 }
